@@ -39,9 +39,13 @@ import org.apache.spark.sql.functions._
   * `graft-manifest 2 <key> <nEntries> <crc32>` followed by entry lines
   * `<kind> <name> <version> <stats>` where stats is `L:<min>:<max>`
   * (per-fileset min/max of an integral key — the Iceberg-style file
-  * skipping input) or `-`. The CRC over the entry bytes plus the entry
-  * count make a TORN manifest machine-detectable: [[latestVersion]]
-  * never selects one, readers fail loudly on one, and the next commit
+  * skipping input) or `-`. Entries are FORWARD-COMPATIBLE: writers emit
+  * exactly these 4 fields, readers require at least 4 and ignore any
+  * field after the fourth, so a later format can append fields without
+  * older readers calling the table torn; an entry with fewer than 4
+  * fields is torn. The CRC over the entry bytes plus the entry count
+  * make a TORN manifest machine-detectable: [[latestVersion]] never
+  * selects one, readers fail loudly on one, and the next commit
   * reclaims its version slot instead of wedging the table.
   *
   * Commits are CRASH-SAFE and support OPTIMISTIC CONCURRENCY: the
@@ -69,8 +73,7 @@ object TimeTravel {
   private val InternalCols = Set("__tombstone", "__change_type")
 
   private case class Entry(kind: String, name: String, ver: Long,
-                           stats: Option[(Long, Long)],
-                           bloom: Option[Array[Byte]] = None)
+                           stats: Option[(Long, Long)])
   private case class Manifest(key: String, entries: Seq[Entry])
 
   private def hconf(): Configuration =
@@ -105,11 +108,8 @@ object TimeTravel {
   }
 
   private def render(m: Manifest): String = {
-    val lines = m.entries.map { e =>
-      val base = s"${e.kind} ${e.name} ${e.ver} ${renderStats(e.stats)}"
-      e.bloom.map(b => s"$base B:${graft.plans.KeyBloom.toBase64(b)}")
-        .getOrElse(base)
-    }
+    val lines = m.entries.map(e =>
+      s"${e.kind} ${e.name} ${e.ver} ${renderStats(e.stats)}")
     (s"graft-manifest 2 ${m.key} ${lines.size} ${crcOf(lines)}" +:
       lines).mkString("\n") + "\n"
   }
@@ -138,14 +138,10 @@ object TimeTravel {
     if (entries.size != n) torn(s"expected $n entries, found ${entries.size}")
     if (crcOf(entries) != crc) torn("checksum mismatch")
     Manifest(key, entries.map { line =>
-      // optional 5th field `B:<base64>`: the file set's key Bloom (r14
-      // — a compatible extension; 4-field entries parse as bloom-less)
+      // fields past the fourth belong to a newer writer: ignored
       line.split(" ") match {
-        case Array(kind, name, ver, st) =>
+        case Array(kind, name, ver, st, _*) =>
           Entry(kind, name, ver.toLong, parseStats(st))
-        case Array(kind, name, ver, st, b) if b.startsWith("B:") =>
-          Entry(kind, name, ver.toLong, parseStats(st),
-            Some(graft.plans.KeyBloom.fromBase64(b.drop(2))))
         case _ => torn(s"bad entry '$line'")
       }
     })
@@ -232,6 +228,8 @@ object TimeTravel {
   private def newDataDir(kind: String, v: Long): String =
     f"$kind-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
 
+  /** The one rule for which merge keys get `[min,max]` range stats:
+    * integral types, widened to long. */
   private def integralKey(df: DataFrame, key: String): Boolean = {
     import org.apache.spark.sql.types._
     Seq(LongType, IntegerType, ShortType, ByteType)
@@ -253,7 +251,7 @@ object TimeTravel {
     * change-type probe's candidate set, and the data write are separate
     * executions of the same plan. A delta containing a
     * non-deterministic expression (rand/uuid/shuffle-order-dependent
-    * limit) could therefore write bytes its recorded stats/Bloom do not
+    * limit) could therefore write bytes its recorded stats do not
     * describe, and snapshot file-skipping would silently drop live
     * rows. Commit deltas MUST be deterministic. (The alternative —
     * observing the metrics on the write job itself — was built and
@@ -263,49 +261,26 @@ object TimeTravel {
     * keeps its single observation because re-executing the merge would
     * cost a full second job.) */
 
-  /** ONE O(|delta|) aggregate per commit (r13; r14 folds in the key
-    * Bloom and the per-entry Bloom probes): the key-uniqueness contract
-    * (one row per key, or the max_by LWW tie inside one version
-    * resolves nondeterministically and snapshots silently diverge —
-    * fails loudly here), the integral-key min/max range, the delta's
-    * own key Bloom (both become the manifest's file-skipping metadata),
-    * and — for every parent chain entry that recorded a Bloom — whether
-    * ANY delta key might live in that file set. Range and Bloom hits
-    * prune the membership probe's chain: a file set that can contain no
-    * candidate key cannot hold a winning row or tombstone for one
-    * either, so skipping it never changes a change type. */
-  private case class DeltaProbe(range: Option[(Long, Long)],
-                                bloom: Option[Array[Byte]],
-                                bloomHit: Map[String, Boolean])
-
-  private def deltaProbe(delta: DataFrame, key: String,
-                         chain: Seq[Entry]): DeltaProbe = {
+  /** ONE O(|delta|) aggregate per commit (r13): the key-uniqueness
+    * contract (one row per key, or the max_by LWW tie inside one
+    * version resolves nondeterministically and snapshots silently
+    * diverge — fails loudly here) and, for an integral key, the delta's
+    * min/max range. The range is the manifest's file-skipping stat and
+    * the ONLY chain pruner of the commit-time membership probe: a file
+    * set whose range is disjoint from the delta's cannot hold a winning
+    * row or tombstone for any candidate key, so skipping it never
+    * changes a change type. Other key types record no range; their
+    * probe scans the whole chain (correct, just unpruned). */
+  private def deltaProbe(delta: DataFrame, key: String): Option[(Long, Long)] = {
     val integral = integralKey(delta, key)
-    val normKey = graft.plans.KeyBloom.normalize(col(key), delta.schema(key).dataType)
-    // Bloom build/probe only for NON-INTEGRAL keys: integral chains
-    // already have the [min,max] range skip, and the Bloom's aggregate
-    // + per-entry probe expressions cost a measured ~0.1–0.25 s per
-    // commit at bench scale — pure waste where the range already
-    // decides. Non-integral (string) keys have no range stats at all;
-    // there the Bloom is the ONLY chain pruner (VERDICT r13 item 4).
-    val wantBloom = !integral
-    val bloomEnts = if (wantBloom) chain.filter(_.bloom.isDefined) else Seq.empty
-    // Two-level shape, deliberately DISTINCT-free: a count_distinct in
-    // the same Aggregate as the Bloom would trigger Spark's
-    // distinct-expand rewrite, whose partial phase groups by the
-    // distinct key — materializing one 16 KiB Bloom buffer PER KEY
-    // (measured: q_time_travel 3.1 s → 6.7 s). groupBy(key).count +
-    // a keyless rollup computes the same uniqueness contract with one
-    // partial-aggregable shuffle and exactly one Bloom buffer per task.
+    // Two-level shape, deliberately DISTINCT-free: count_distinct would
+    // trigger Spark's distinct-expand rewrite. groupBy(key).count + a
+    // keyless rollup computes the same uniqueness contract with one
+    // partial-aggregable shuffle.
     val perKey = delta.groupBy(col(key)).agg(count(lit(1)).as("__c"))
-    val aggs = (Seq(sum(col("__c")), count(col(key))) ++
+    val aggs = Seq(sum(col("__c")), count(col(key))) ++
       (if (integral) Seq(min(col(key).cast("long")), max(col(key).cast("long")))
-       else Seq.empty) ++
-      (if (wantBloom) Seq(graft.plans.KeyBloom.agg(normKey)) else Seq.empty) ++
-      bloomEnts.map { e =>
-        max(when(graft.plans.KeyBloom.mightContain(normKey, e.bloom.get), 1L)
-          .otherwise(0L))
-      })
+       else Seq.empty)
     val r = perKey.agg(aggs.head, aggs.tail: _*).head()
     // rows == distinct NON-NULL keys (count(key) skips the null group),
     // exactly the old count(*) == count_distinct(key) contract; an
@@ -314,56 +289,72 @@ object TimeTravel {
     require(nRows == r.getLong(1),
       s"delta must be key-unique on $key: $nRows rows, " +
         s"${r.getLong(1)} distinct keys")
-    val range =
-      if (integral && !r.isNullAt(2)) Some((r.getLong(2), r.getLong(3)))
-      else None
-    val bloom = if (wantBloom) Some(r.getAs[Array[Byte]](2)) else None
-    val base = (if (integral) 4 else 2) + (if (wantBloom) 1 else 0)
-    val hits = bloomEnts.zipWithIndex.map { case (e, j) =>
-      e.name -> (!r.isNullAt(base + j) && r.getLong(base + j) == 1L)
-    }.toMap
-    DeltaProbe(range, bloom, hits)
+    if (integral && !r.isNullAt(2)) Some((r.getLong(2), r.getLong(3)))
+    else None
   }
 
   /** Create version 0 from a full snapshot, recording `key` as the
     * table's merge key (manifests carry it from here on, so writers
-    * never re-specify it). Uniqueness + manifest stats + Bloom in ONE
-    * pass; the write is this same (deterministic — see the contract
-    * above) frame, so the metadata describes the written bytes. */
+    * never re-specify it). Uniqueness + manifest stats in ONE pass; the
+    * write is this same (deterministic — see the contract above) frame,
+    * so the metadata describes the written bytes. */
   def init(df: DataFrame, root: String, key: String): Long = {
     require(df.columns.contains(key), s"no column $key in ${df.columns.toSeq}")
     require(latestVersion(root) == -1L, s"table at $root already exists")
     val name = newDataDir("base", 0L)
-    val probe = overlappedCommitJobs(df, root, name, key) {
+    val range = overlappedCommitJobs(df, root, name, key) {
       fastCommit(df.write).mode("errorifexists")
         .parquet(new Path(root, name).toString)
     }
     val ok = writeManifest(root, 0L,
-      Manifest(key, Seq(Entry("base", name, 0L, probe.range, probe.bloom))))
+      Manifest(key, Seq(Entry("base", name, 0L, range))))
     require(ok, s"concurrent init of $root lost the version-0 race")
     0L
+  }
+
+  /** Runs the overlapped metadata aggregates: daemon threads, so an
+    * idle pool never holds the JVM open. */
+  private lazy val probePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-commit-probe")
+    t.setDaemon(true)
+    t
   }
 
   /** Overlap the metadata aggregate with the DATA WRITE when the two
     * are independent (init and fixed-type commits: the written rows do
     * not depend on the probe — guide §2.6 "overlap independent jobs").
-    * The manifest is only published after BOTH succeed, and the staged
-    * file set is unreferenced until then, so a uniqueness failure still
-    * aborts the commit cleanly: the staged dir is deleted and the
-    * failure rethrown. Wall time per commit: max(agg, write) instead of
-    * agg + write. */
+    * The probe runs with the CALLER's local properties (job group,
+    * scheduler pool, SQL execution context), so a caller's
+    * `cancelJobGroup` reaches it, plus a per-commit job tag. The
+    * manifest is only published after BOTH succeed, and the staged file
+    * set is unreferenced until then, so a failure of either aborts the
+    * commit cleanly: the probe's jobs are cancelled by tag and the probe
+    * awaited (no job outlives the commit), the staged dir is deleted and
+    * the failure rethrown. Wall time per commit: max(agg, write) instead
+    * of agg + write. */
   private def overlappedCommitJobs(delta: DataFrame, root: String,
                                    name: String, key: String)
-                                  (write: => Unit): DeltaProbe = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val probeF = Future { deltaProbe(delta, key, Seq.empty) }
+                                  (write: => Unit): Option[(Long, Long)] = {
+    import java.util.concurrent.{ExecutionException, TimeUnit}
+    val s = delta.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val tag = s"graft-commit-probe-$name"
+    val probeF = org.apache.spark.sql.execution.SQLExecution
+      .withThreadLocalCaptured(s, probePool) {
+        s.sparkContext.addJobTag(tag)
+        deltaProbe(delta, key)
+      }
     try {
       write
-      Await.result(probeF, Duration.Inf)
+      try probeF.get() catch { case e: ExecutionException => throw e.getCause }
     } catch {
       case e: Throwable =>
+        // cancel until the probe settles: its job may not be submitted
+        // yet when the write fails, so one cancel could miss it
+        while (!probeF.isDone) {
+          s.sparkContext.cancelJobsWithTag(tag)
+          try probeF.get(100, TimeUnit.MILLISECONDS)
+          catch { case _: Exception => () }
+        }
         // reap the staged (unreferenced) file set before failing loudly
         try fileSystem(root).delete(new Path(root, name), true)
         catch { case _: Throwable => () }
@@ -394,10 +385,10 @@ object TimeTravel {
   }
 
   /** Test-only diagnostic: how many parent chain entries the LAST
-    * upsert's membership probe actually scanned after range + Bloom
-    * pruning (-1 = no probe ran: init/delete/idempotent-replay).
-    * TimeTravelSpec asserts the disjoint-key skip path (0) through it;
-    * nothing in the engine reads it. */
+    * upsert's membership probe actually scanned after range pruning
+    * (-1 = no probe ran: init/delete/idempotent-replay). TimeTravelSpec
+    * asserts the disjoint-key skip path (0) through it; nothing in the
+    * engine reads it. */
   private[graft] var lastProbeScannedEntries: Int = -1
 
   /** Shared commit path: stage the delta file set under a fresh name,
@@ -427,16 +418,14 @@ object TimeTravel {
       require(delta.columns.contains(key),
         s"delta lacks the table key $key")
       val v = prev + 1
-      // Change types: a fixed-type commit (delete) needs no probe and
-      // is ONE Spark job (uniqueness/stats/Bloom ride the write). An
-      // upsert runs ONE O(|delta|) probe aggregate first (uniqueness +
-      // range + per-entry Bloom hits), prunes the parent chain with
-      // range AND Bloom, and — when the whole chain prunes away (a
-      // disjoint-key delta, of ANY key type) — skips the membership
-      // join entirely: every row is an insert.
-      // ONE aggregate job: uniqueness + range + Bloom + chain-prune
-      // hits. The typed write below carries exactly these keys (the
-      // determinism contract above), so no post-write read-back pass.
+      // Change types: a fixed-type commit (delete) needs no membership
+      // probe (its uniqueness/stats aggregate runs alongside the write).
+      // An upsert runs ONE O(|delta|) aggregate first (uniqueness +
+      // range), prunes the parent chain by range, and — when the whole
+      // chain prunes away (a disjoint-range integral delta) — skips the
+      // membership join entirely: every row is an insert. The typed
+      // write below carries exactly these keys (the determinism
+      // contract above), so no post-write read-back pass.
       // Fixed-type commits overlap the aggregate with the write (the
       // tombstone projection does not depend on the probe); upserts are
       // inherently sequential — the probe's prune decisions shape the
@@ -444,20 +433,19 @@ object TimeTravel {
       val chain = dataEntries(m.entries)
       val name = newDataDir("delta", v)
       val dataPath = new Path(root, name).toString
-      val probe = fixedType match {
+      val range = fixedType match {
         case Some(t) =>
           val typed = delta.withColumn("__change_type", lit(t))
           overlappedCommitJobs(delta, root, name, key) {
             fastCommit(typed.write).mode("errorifexists").parquet(dataPath)
           }
         case None =>
-          val p = deltaProbe(delta, key, chain)
+          val r = deltaProbe(delta, key)
           val kept = chain.filter { e =>
-            val rangeOk = (e.stats, p.range) match {
+            (e.stats, r) match {
               case (Some((lo, hi)), Some((clo, chi))) => hi >= clo && lo <= chi
               case _ => true
             }
-            rangeOk && p.bloomHit.getOrElse(e.name, true)
           }
           lastProbeScannedEntries = kept.size
           val typed =
@@ -472,9 +460,9 @@ object TimeTravel {
                 .drop("__live")
             }
           fastCommit(typed.write).mode("errorifexists").parquet(dataPath)
-          p
+          r
       }
-      val newEnts = Entry("delta", name, v, probe.range, probe.bloom) +:
+      val newEnts = Entry("delta", name, v, range) +:
         txnId.map(Entry("txn", _, v, None)).toSeq
       val ok = writeManifest(root, v, Manifest(key, m.entries ++ newEnts))
       if (ok) return v
@@ -535,38 +523,29 @@ object TimeTravel {
     val name = newDataDir("base", v)
     val dataPath = new Path(root, name).toString
     val merged = snapshot(s, root, prev, key)
-    // single-fileset stats + key Bloom ride the WRITE job as observed
-    // metrics (r13 optimization: the old statsOf re-read every written
-    // byte in a second job); the bucketed path still needs its
-    // per-file pass and records per-file ranges only (a per-file Bloom
-    // would need a per-file aggregation of the written bytes — the
-    // range prune already serves the bucketed point-lookup path).
     val dataEnts =
       if (buckets == 1) {
-        // stats (integral range, or the key Bloom for non-integral
-        // keys) ride the write as observed metrics (r13 optimization:
-        // the old statsOf re-read every written byte in a second job;
-        // re-executing the merge pre-write would cost the same, so
-        // compaction keeps its single Observation)
-        val integral = integralKey(merged, key)
-        val normKey = graft.plans.KeyBloom.normalize(
-          col(key), merged.schema(key).dataType)
-        val obs = new org.apache.spark.sql.Observation(
-          s"graft-compact-$v-" + java.util.UUID.randomUUID().toString.take(8))
-        val aggs =
-          if (integral) Seq(min(col(key).cast("long")).as("mn"),
-            max(col(key).cast("long")).as("mx"))
-          else Seq(graft.plans.KeyBloom.agg(normKey).as("bloom"))
-        val toWrite = merged.observe(obs, aggs.head, aggs.tail: _*)
-        fastCommit(toWrite.write).mode("errorifexists").parquet(dataPath)
-        val r = obs.get
+        // the integral range rides the write as observed metrics (r13
+        // optimization: the old statsOf re-read every written byte in a
+        // second job; re-executing the merge pre-write would cost the
+        // same, so compaction keeps its single Observation); other key
+        // types record no stats
         val st =
-          if (integral && r("mn") != null)
-            Some((r("mn").asInstanceOf[Long], r("mx").asInstanceOf[Long]))
-          else None
-        val bloom =
-          if (integral) None else Some(r("bloom").asInstanceOf[Array[Byte]])
-        Seq(Entry("base", name, v, st, bloom))
+          if (!integralKey(merged, key)) {
+            fastCommit(merged.write).mode("errorifexists").parquet(dataPath)
+            None
+          } else {
+            val obs = new org.apache.spark.sql.Observation(
+              s"graft-compact-$v-" + java.util.UUID.randomUUID().toString.take(8))
+            val toWrite = merged.observe(obs,
+              min(col(key).cast("long")).as("mn"),
+              max(col(key).cast("long")).as("mx"))
+            fastCommit(toWrite.write).mode("errorifexists").parquet(dataPath)
+            val r = obs.get
+            if (r("mn") == null) None
+            else Some((r("mn").asInstanceOf[Long], r("mx").asInstanceOf[Long]))
+          }
+        Seq(Entry("base", name, v, st))
       } else {
         fastCommit(merged.repartitionByRange(buckets, col(key)).write)
           .mode("errorifexists").parquet(dataPath)
@@ -592,13 +571,8 @@ object TimeTravel {
     val files = fileSystem(root).listStatus(dirPath).toSeq
       .map(_.getPath.getName).filter(_.startsWith("part-")).sorted
     val df = s.read.parquet(dirPath.toString)
-    val integral = {
-      import org.apache.spark.sql.types._
-      Seq(LongType, IntegerType, ShortType, ByteType)
-        .contains(df.schema(key).dataType)
-    }
     val statsByFile: Map[String, (Long, Long)] =
-      if (!integral) Map.empty
+      if (!integralKey(df, key)) Map.empty
       else df.groupBy(input_file_name().as("__f"))
         .agg(min(col(key).cast("long")).as("mn"),
           max(col(key).cast("long")).as("mx"))

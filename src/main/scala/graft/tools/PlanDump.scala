@@ -474,7 +474,8 @@ object PlanDump {
         |change — with a controlled ANCHOR PAIR: the full 374-query
         |registry run twice back-to-back from a FROZEN classpath snapshot
         |of the r12-identical tree (`anchor_cp_r13/`, committed script
-        |`tools/run_bench_anchor.sh`), so recompiles during the round
+        |`tools/run_bench_anchor.sh`, since folded into `tools/run_bench.sh`),
+        |so recompiles during the round
         |cannot perturb the measurement. Results
         |(BENCH_r13_anchor_{a,b}.json): A = 360.8 s median / 321.1 s min,
         |B = 336.6 s / 297.2 s — 7% apart on IDENTICAL bytes (the ambient

@@ -242,58 +242,133 @@ class TimeTravelSpec extends SparkSpec {
       s"unexpected survivors: $left")
   }
 
-  test("KeyBloom: SQL-side build/probe and driver-side probe agree bit-for-bit") {
-    import graft.plans.KeyBloom
-    // driver-side hashLongs must replicate SQL xxhash64(k) / xxhash64(k, 1)
-    val ks = Seq(-1L, 0L, 1L, 42L, 123456789L, Long.MaxValue)
-    val sql = ks.toDF("k")
-      .select(xxhash64($"k"), xxhash64($"k", lit(1L)))
-      .as[(Long, Long)].collect().toSeq
-    assert(sql === ks.map(KeyBloom.hashLongs))
-    // build over 1..500; every inserted key probes TRUE on the driver,
-    // and the SQL-side probe aggregate agrees with membership
-    val bloom = (1L to 500L).toDF("k")
-      .agg(KeyBloom.agg($"k")).as[Array[Byte]].head()
-    assert(KeyBloom.mightContainAny(bloom, Seq(7L)))
-    assert(KeyBloom.mightContainAny(bloom, Seq(900L, 250L)))
-    // 200 disjoint keys: at ~4% worst-case FP for this fill, ANY-hit
-    // over a disjoint probe set can fire; assert per-key FP is rare
-    val fp = (10001L to 10200L).count(k => KeyBloom.mightContainAny(bloom, Seq(k)))
-    assert(fp < 20, s"implausible Bloom false-positive count: $fp/200")
-    val sqlHits = (1L to 500L).toDF("k")
-      .agg(max(when(KeyBloom.mightContain($"k", bloom), 1L).otherwise(0L)))
-      .as[Long].head()
-    assert(sqlHits === 1L)
-    val sqlMiss = Seq(10007L).toDF("k")
-      .agg(max(when(KeyBloom.mightContain($"k", bloom), 1L).otherwise(0L)))
-      .as[Long].head()
-    assert(KeyBloom.mightContainAny(bloom, Seq(10007L)) === (sqlMiss === 1L))
+  test("TimeTravel: the commit-time range skip prunes the probe chain") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttk-spec").toString
+    TimeTravel.init(
+      (1L to 100L).map(k => (k, "a", k)).toDF("k", "seg", "v"), root, "k")
+    // DISJOINT-range upsert: the base's [1,100] misses [201,210] -> 0
+    // entries scanned, all rows typed insert without the membership join
+    TimeTravel.upsert(root,
+      (201L to 210L).map(k => (k, "b", k)).toDF("k", "seg", "v"))
+    assert(TimeTravel.lastProbeScannedEntries === 0,
+      "a disjoint-range delta must skip the whole chain")
+    // OVERLAPPING upsert: [5,6] hits the base only, not delta [201,210]
+    TimeTravel.upsert(root,
+      Seq((5L, "c", 55L), (6L, "c", 66L)).toDF("k", "seg", "v"))
+    assert(TimeTravel.lastProbeScannedEntries === 1,
+      "an overlapping delta must probe exactly the base")
+    val ch = TimeTravel.changes(spark, root, 0L, 2L, "k")
+      .select("k", "_commit_version", "_change_type")
+      .as[(Long, Long, String)].collect().toSet
+    assert(ch === (201L to 210L).map(k => (k, 1L, "insert")).toSet ++
+      Set((5L, 2L, "update"), (6L, 2L, "update")))
+    val snap = rows(TimeTravel.snapshot(spark, root, 2L, "k"))
+    assert(snap.size === 110 && snap.contains((5L, "c", 55L)) &&
+      snap.contains((205L, "b", 205L)))
   }
 
-  test("TimeTravel: a STRING-keyed disjoint delta takes the Bloom skip path") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ttb-spec").toString
+  test("TimeTravel: a STRING-keyed table types changes correctly, unpruned") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tts-spec").toString
     val base = (1 to 200).map(i => (f"doc-$i%04d", i.toLong)).toDF("k", "v")
     TimeTravel.init(base, root, "k")
-    // overlapping-key upsert: the probe must SCAN the base (no skip —
-    // string keys have no range stats, so this is pure Bloom behaviour)
     TimeTravel.upsert(root,
       Seq(("doc-0001", 101L), ("doc-0002", 102L)).toDF("k", "v"))
-    assert(TimeTravel.lastProbeScannedEntries === 1,
-      "an overlapping string delta must probe the base")
-    // DISJOINT-key upsert: every chain Bloom must miss -> 0 entries
-    // scanned, all rows typed insert without the membership join
+    assert(TimeTravel.lastProbeScannedEntries === 1)
+    // string keys record no range stats: even a DISJOINT upsert probes
+    // the full chain (base + delta-1)
     TimeTravel.upsert(root,
       Seq(("zzz-9991", 1L), ("zzz-9992", 2L)).toDF("k", "v"))
-    assert(TimeTravel.lastProbeScannedEntries === 0,
-      "a disjoint string delta must skip the whole chain")
-    val ch = TimeTravel.changes(spark, root, 1L, 2L, "k")
+    assert(TimeTravel.lastProbeScannedEntries === 2)
+    val ch = TimeTravel.changes(spark, root, 0L, 2L, "k")
       .select("k", "_change_type").as[(String, String)].collect().toSet
-    assert(ch === Set(("zzz-9991", "insert"), ("zzz-9992", "insert")))
-    // the skip changed no semantics: snapshot equals the full merge
+    assert(ch === Set(("doc-0001", "update"), ("doc-0002", "update"),
+      ("zzz-9991", "insert"), ("zzz-9992", "insert")))
     val snap = TimeTravel.snapshot(spark, root, 2L, "k")
       .as[(String, Long)].collect().toSet
     assert(snap.size === 202 && snap.contains(("doc-0001", 101L)) &&
-      snap.contains(("zzz-9991", 1L)))
+      snap.contains(("zzz-9991", 1L)) && snap.contains(("doc-0003", 3L)))
+  }
+
+  /** Entry lines of version `v`'s manifest (the header line dropped). */
+  private def manifestEntries(root: String, v: Long): Seq[String] =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, f"manifest-$v%05d.txt")), "UTF-8")
+      .split("\n").toSeq.tail.filter(_.nonEmpty)
+
+  /** Hand-write version `v`'s manifest with a VALID header and CRC. */
+  private def writeManifest(root: String, v: Long, key: String,
+                            entries: Seq[String]): Unit = {
+    val crc = new java.util.zip.CRC32()
+    crc.update(entries.mkString("\n").getBytes("UTF-8"))
+    val header = s"graft-manifest 2 $key ${entries.size} " +
+      java.lang.Long.toHexString(crc.getValue)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, f"manifest-$v%05d.txt"),
+      ((header +: entries).mkString("\n") + "\n").getBytes("UTF-8"))
+  }
+
+  test("TimeTravel: manifests write 4-field entries, read unknown trailing fields") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttm-spec").toString
+    TimeTravel.init(
+      (1L to 20L).map(k => (k, "a", k)).toDF("k", "seg", "v"), root, "k")
+    TimeTravel.upsertOnce(root,
+      Seq((2L, "b", 22L), (30L, "b", 30L)).toDF("k", "seg", "v"), "batch-0")
+    TimeTravel.delete(root, Seq(3L).toDF("k"))
+    TimeTravel.compact(spark, root, "k")
+    val v4 = TimeTravel.compact(spark, root, "k", buckets = 2)
+    for (v <- 0L to v4; e <- manifestEntries(root, v))
+      assert(e.split(" ").length === 4, s"manifest $v entry '$e'")
+    // a newer writer's extra field: the manifest still reads, as the
+    // same table
+    writeManifest(root, v4 + 1, "k", manifestEntries(root, v4).map(_ + " Z:1"))
+    assert(TimeTravel.latestVersion(root) === v4 + 1)
+    assert(rows(TimeTravel.snapshot(spark, root, v4 + 1, "k")) ===
+      rows(TimeTravel.snapshot(spark, root, v4, "k")))
+    // commits extend it, and write 4-field entries again
+    val v6 = TimeTravel.upsert(root, Seq((40L, "c", 40L)).toDF("k", "seg", "v"))
+    assert(v6 === v4 + 2)
+    assert(manifestEntries(root, v6).forall(_.split(" ").length == 4))
+    assert(TimeTravel.upsertOnce(root,
+      Seq((2L, "b", 22L)).toDF("k", "seg", "v"), "batch-0") === 1L)
+    // a 3-field entry is torn even under a valid checksum
+    writeManifest(root, v6 + 1, "k",
+      manifestEntries(root, v6).map(_.split(" ").take(3).mkString(" ")))
+    assert(TimeTravel.latestVersion(root) === v6)
+    intercept[java.io.IOException] { TimeTravel.snapshot(spark, root, v6 + 1, "k") }
+  }
+
+  test("TimeTravel.init: a failed write cancels and awaits the overlapped probe") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val root = java.nio.file.Files.createTempDirectory("graft-ttc-spec").toString
+    // left alone, the probe's tasks run 20 s each; the kill check lets a
+    // cancelled task stop at its next row
+    val slowKey = udf { (k: Long) =>
+      if (org.apache.spark.TaskContext.get().isInterrupted())
+        throw new org.apache.spark.TaskKilledException("cancelled")
+      Thread.sleep(100)
+      k
+    }
+    // Parquet cannot write an interval column, so the write fails while
+    // the probe (which never reads the column) is still running
+    val df = spark.range(0, 800, 1, 4).select(slowKey($"id").as("k"),
+      expr("make_interval(0, 0, 0, 0, 0, 0, 1)").as("iv"))
+    val t0 = System.nanoTime()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TimeTravel.init(df, root, "k")
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 15, s"init took $secs s: the probe ran to completion")
+    // the status store trails the scheduler by a listener-bus hop; once
+    // drained, no probe job may start later either
+    val tracker = spark.sparkContext.statusTracker
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      assert(tracker.getActiveJobIds.isEmpty)
+    }
+    Thread.sleep(1000)
+    assert(tracker.getActiveJobIds.isEmpty, "an orphaned probe job started")
+    assert(!new java.io.File(root).list().exists(_.startsWith("base-")))
+    assert(TimeTravel.latestVersion(root) === -1L)
   }
 
   test("TimeTravel.upsertOnce: a replayed txn commits nothing; markers survive compaction") {
