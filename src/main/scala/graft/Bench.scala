@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Materialize the FULL result, order included: a bare `.count()` lets
     * Catalyst's EliminateSorts drop a top-level ORDER BY under the
@@ -10,33 +10,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Dev aid: comma-separated query-name filter (default: all).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
+    // Dev aid: comma-separated query-name filter (empty or unset: all).
+    // A misspelt name is an error, not a silently smaller run.
+    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",")
+      .map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] unknown query in SPARK_GRAFT_ONLY: " +
+        unknown.toSeq.sorted.mkString(","))
+      sys.exit(2)
+    }
     // Name-sorted: Map iteration order is hash-dependent, so an unsorted
     // run would time queries in a different sequence every build, making
     // cross-round per-query deltas partly an artifact of neighbors.
     def selected = SparkEntry.queries.filter { case (n, _) =>
       only.isEmpty || only.contains(n) }.toSeq.sortBy(_._1)
-    val spark = SparkSession.builder()
-      // ,2 = task-retry budget (stream_task_retry's injected failure)
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r14: the r13 session-wide AQE floor override
-      // (coalescePartitions.minPartitionSize 1 MB → 256k) is GONE. It
-      // bought the window-family wins by multiplying tasks on every
-      // KB-sized shuffle, which regressed all 15 graph_* queries
-      // (iterative rounds pay the task-count tax every round) and the
-      // cheap-aggregation tail. The window parallelism now comes from
-      // an explicit scale-gated keyed repartition at the three window
-      // query sites (Spread.byKey — an engine change, not a bench
-      // conf), and AQE coalescing runs at its defaults.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warmup pass at the TARGET SF: JIT, codegen, parquet footers, page
     // cache, and the size-dependent execution paths (hash-table growth,
     // spill thresholds) all warm at the data scale being measured — a
@@ -116,8 +105,8 @@ object Bench {
         val t = try {
           val pb = new ProcessBuilder(
             (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
+          // inherits the rest of the environment, SPARK_GRAFT_CPUS included
           pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-          pb.environment().put("SPARK_GRAFT_CPUS", cpus)
           pb.environment().put("SPARK_GRAFT_ONLY", name)
           pb.environment().put("SPARK_GRAFT_NO_ISOLATED", "1")
           pb.environment().put("SPARK_GRAFT_SKIP_OUTFILE", "1")

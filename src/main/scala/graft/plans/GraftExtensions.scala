@@ -12,60 +12,42 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinhashSignature(children(0),
-        MinhashSignature.foldNumHashes(children(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_top_count"),
-      new ExpressionInfo(classOf[TopElementCount].getName, "graft_top_count"),
-      (children: Seq[Expression]) => TopElementCount(children(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_stats"),
-      new ExpressionInfo(classOf[CharStats].getName, "graft_char_stats"),
-      (children: Seq[Expression]) => CharStats(children(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
-    // table-generating function (UDTF): LATERAL VIEW graft_pos_ngrams(w, 3)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pos_ngrams"),
-      new ExpressionInfo(classOf[PosNgramsGen].getName, "graft_pos_ngrams"),
-      (children: Seq[Expression]) => PosNgramsGen(children(0),
-        PosNgramsGen.foldWidth(children(1)))))
+    GraftExtensions.Functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     // optimizer rule: size(filter(w, x -> x IN (...))) -> CountInSet
     ext.injectOptimizerRule(_ => RewriteCountInSet)
   }
 }
 
 object GraftExtensions {
+  /** The SQL functions, one table for both registration paths (session
+    * construction and `register`), so the two cannot drift:
+    * (SQL name, expression class, builder from the call's arguments). */
+  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct],
+      c => DotProduct(c(0), c(1))),
+    ("graft_minhash", classOf[MinhashSignature],
+      c => MinhashSignature(c(0), MinhashSignature.foldNumHashes(c(1)))),
+    ("graft_top_count", classOf[TopElementCount],
+      c => TopElementCount(c(0))),
+    ("graft_char_stats", classOf[CharStats],
+      c => CharStats(c(0))),
+    ("graft_jaro_winkler", classOf[JaroWinkler],
+      c => JaroWinkler(c(0), c(1))),
+    // table-generating function (UDTF): LATERAL VIEW graft_pos_ngrams(w, 3)
+    ("graft_pos_ngrams", classOf[PosNgramsGen],
+      c => PosNgramsGen(c(0), PosNgramsGen.foldWidth(c(1)))))
+
   /** Register graft functions + the optimizer rule on an
     * already-running session (the extensions config only applies at
-    * session construction). Mirrors the injectFunction list above —
-    * the graded q_sql_native_funcs query goes through this path, so
-    * the SQL names cannot drift from the Column-API expressions. */
+    * session construction). The graded q_sql_native_funcs query goes
+    * through this path. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graftbridge.Bridge.registerFunction
-    registerFunction(spark, "graft_dot",
-      children => DotProduct(children(0), children(1)))
-    registerFunction(spark, "graft_minhash",
-      children => MinhashSignature(children(0),
-        MinhashSignature.foldNumHashes(children(1))))
-    registerFunction(spark, "graft_top_count",
-      children => TopElementCount(children(0)))
-    registerFunction(spark, "graft_char_stats",
-      children => CharStats(children(0)))
-    registerFunction(spark, "graft_jaro_winkler",
-      children => JaroWinkler(children(0), children(1)))
-    registerFunction(spark, "graft_pos_ngrams",
-      children => PosNgramsGen(children(0),
-        PosNgramsGen.foldWidth(children(1))))
+    Functions.foreach { case (name, _, builder) =>
+      registerFunction(spark, name, builder) }
     if (!spark.experimental.extraOptimizations.contains(RewriteCountInSet))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteCountInSet

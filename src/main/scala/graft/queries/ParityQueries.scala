@@ -33,19 +33,9 @@ object ParityQueries {
     * sizes this to the state volume; these bounded graded runs pin it
     * small. The streaming plan binds the value at `start()`, so setting
     * it around query construction + execution is sufficient. */
-  private[queries] def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  private[queries] def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
-  /** Conf-scoped streaming state-store provider override (the
-    * withShufflePartitions pattern): the provider class is read from
-    * SQLConf when a StreamingQuery starts, so a set/restore scoped
-    * around one bounded run pins the state BACKEND for that query
-    * only — the surface a 100 TB deployment flips to move streaming
-    * state off executor heaps. */
   /** Scoped session-conf override: set, run, restore (or unset if the
     * key was unset). The ONE save/restore implementation behind every
     * conf-dependent query — hand-rolled copies of this pattern are how

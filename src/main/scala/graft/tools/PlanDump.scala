@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Regenerates PLANS.md: the physical plans of representative graded
   * queries with the scale-relevant evidence (pushdown, broadcasts,
@@ -371,14 +371,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8,2]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of representative graded queries\n\n")

@@ -2,14 +2,13 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
-import graft.SparkEntry
-
-/** Round-13 optimization evidence: dump `explain("formatted")` of named
-  * graded queries to `<outDir>/<name>_<tag>.txt` in ONE session — the
-  * before/after plan files the optimization round commits under
-  * `plans/r13/`. Usage:
+/** Plan auditor: dump `explain("formatted")` of named graded queries to
+  * `<outDir>/<name>_<tag>.txt` in ONE session — how an operator's
+  * pushdown / broadcast / codegen is checked before it counts as done,
+  * and the before/after plan files an optimization round commits (e.g.
+  * `plans/r13/`). Time a query with Bench and `SPARK_GRAFT_ONLY`. Usage:
   *   runMain graft.tools.PlanSnap <outDir> <tag> <sfDir> <name> [name...]
   */
 object PlanSnap {
@@ -19,14 +18,7 @@ object PlanSnap {
     val sfDir = args(2)
     val names = args.drop(3)
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master("local[32,2]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       val txt =
         try {

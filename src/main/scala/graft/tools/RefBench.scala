@@ -2,10 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
+import graft.Session
 import graft.functions.CsvCodec
 import graft.sources.RecordGenerator
 
@@ -22,6 +22,7 @@ import graft.sources.RecordGenerator
   * 500–600 k rec/s per key on 4 cores / 2 GB.
   *
   * Usage: runMain graft.tools.RefBench [n] [outDir]
+  * Cores come from `SPARK_GRAFT_CPUS` (default 4, the reference's setup).
   */
 object RefBench {
   def main(args: Array[String]): Unit = {
@@ -29,14 +30,8 @@ object RefBench {
     val pos = args.filterNot(_.startsWith("--"))
     val n = if (pos.length > 0) pos(0).toLong else 50000000L
     val base = if (pos.length > 1) pos(1) else "/tmp/graft_refbench"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
@@ -47,7 +42,7 @@ object RefBench {
       Files.exists(Paths.get(src, "_SUCCESS"))
     val (_, tGen) = timed {
       if (!reuse)
-        RecordGenerator.recordsFast(spark, n, seed = 42, numPartitions = cpus.toInt * 4)
+        RecordGenerator.recordsFast(spark, n, seed = 42, numPartitions = cpus * 4)
           .select(CsvCodec.encode(col("id"), col("name"), col("address"), col("continent"))
             .as("line"))
           .write.mode("overwrite").parquet(src)
@@ -74,7 +69,7 @@ object RefBench {
       if (flags.contains("--stage-metrics")) Some(StageMetrics.attach(spark))
       else None
 
-    val useSpread = cpus.toInt > 6
+    val useSpread = cpus > 6
     val keys = Seq(
       ("id", 0, LongType, false),
       ("name", 1, StringType, useSpread),

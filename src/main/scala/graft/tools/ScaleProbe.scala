@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.operators.{Dedup, Graph, Hierarchy, Similarity, Sweep, TextAnalysis}
 
 /** Empirical scaling probe for the near-dup operators: replicates the
@@ -18,13 +19,7 @@ import graft.operators.{Dedup, Graph, Hierarchy, Similarity, Sweep, TextAnalysis
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val nBase = base.count()

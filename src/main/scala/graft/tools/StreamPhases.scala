@@ -4,10 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Round-14 measurement (VERDICT item 5): decompose streaming
   * micro-batch time into its protocol phases — incremental planning,
@@ -21,14 +20,7 @@ object StreamPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[32,2]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val progresses =
       new ConcurrentLinkedQueue[org.apache.spark.sql.streaming.StreamingQueryProgress]()
     spark.streams.addListener(new StreamingQueryListener {

@@ -4,20 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. local[4] keeps test latency low while
-  * still exercising multi-partition shuffles. */
+/** Shared local session for specs: the mains' `Session.local`, pinned
+  * to 4 cores whatever `SPARK_GRAFT_CPUS` says. local[4] keeps test
+  * latency low while still exercising multi-partition shuffles. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4,2]") // ,2 = task-retry budget (FaultInjection grades)
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4)
 }

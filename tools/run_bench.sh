@@ -6,7 +6,8 @@
 # Usage: tools/run_bench.sh <classpath_dir> <outfile> [cpus] [names-csv]
 #   cpus       SPARK_GRAFT_CPUS for the run (default: nproc)
 #   names-csv  comma-separated query names to run (default: the full
-#              registry); a name list is a focused min-of-3 run
+#              registry); a name list is a focused min-of-3 run, and
+#              an unknown name makes Bench exit 2
 # The fixture directory is Bench's own SPARK_GRAFT_SF_DIR default unless
 # the caller exports one.
 set -u
@@ -27,12 +28,12 @@ cd "$(dirname "$0")/.."
 if [ -n "${SPARK_HOME:-}" ]; then JARS="$SPARK_HOME/jars"
 else JARS="$(sed -n 's/.*unmanagedBase *:= *file("\([^"]*\)").*/\1/p' build.sbt)"
 fi
-# Bench reads an empty SPARK_GRAFT_ONLY as a filter matching no query,
-# so it is exported only when names are given
-if [ -n "$NAMES" ]; then export SPARK_GRAFT_ONLY="$NAMES"; fi
+SPARK_GRAFT_ONLY="$NAMES" \
 SPARK_GRAFT_CPUS="$CPUS" \
 SPARK_GRAFT_SKIP_OUTFILE=1 \
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP:$JARS/*" graft.Bench \
   2>/dev/null | grep -v '^\[' | tail -1 > "$OUT"
+status=${PIPESTATUS[0]}
+if [ "$status" -ne 0 ]; then echo "$0: graft.Bench exited $status" >&2; exit "$status"; fi
