@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.functions.CsvCodec
@@ -28,11 +29,13 @@ object ParityQueries {
     * restoring the session conf after. The stateful `stream_*` graded
     * queries run on a fixture of a few thousand rows, but the state
     * store instantiates one provider per shuffle partition × stateful
-    * operator × micro-batch — at the session default of 32 that fan-out
-    * (not the dataflow) dominates their wall time. A real deployment
-    * sizes this to the state volume; these bounded graded runs pin it
-    * small. The streaming plan binds the value at `start()`, so setting
-    * it around query construction + execution is sufficient. */
+    * operator × micro-batch. `Session.local` sets one shuffle partition
+    * per core, so the pin to 4 does nothing at 4 cores; at 8 or 32
+    * cores it bounds that fan-out, which (not the dataflow) would
+    * otherwise dominate their wall time. A real deployment sizes this to
+    * the state volume; these bounded graded runs pin it small. The
+    * streaming plan binds the value at `start()`, so setting it around
+    * query construction + execution is sufficient. */
   private[queries] def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
     withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
@@ -118,17 +121,36 @@ object ParityQueries {
     def register(topic: String): Unit = { names.add(topic); () }
   }
 
-  /** Snapshot a bounded memory-sink table into a LOCAL DataFrame and
-    * DROP the sink's temp view, so repeated graded runs don't
-    * accumulate UUID-named tables in the session catalog. Sound only
-    * because every memory sink here is bounded (final state /
-    * fixture-sized emission log), and the snapshot is what the stream
-    * grading already hands downstream. */
-  private[queries] def snapshotAndDrop(s: SparkSession, qn: String): DataFrame = {
-    val sink = s.table(qn)
-    val snap = s.createDataFrame(sink.collectAsList(), sink.schema)
-    s.catalog.dropTempView(qn)
-    snap
+  /** Prefix of the memory-sink views [[drain]] creates (and drops). */
+  private[graft] val DrainViewPrefix = "graft_drain_"
+
+  /** Run the streaming frame `df` to completion and return its output:
+    * the ONE run-to-completion protocol behind every memory-sink
+    * `stream_*` query. `Trigger.AvailableNow` pins the source's end
+    * offsets at start, so the run is bounded; the memory sink lives
+    * under a generated unique name, is snapshotted into a LOCAL
+    * DataFrame, and its temp view is dropped, so repeated graded runs
+    * don't accumulate tables in the session catalog. Sound only because
+    * every memory sink here is bounded (final state / fixture-sized
+    * emission log). Callers that read the checkpoint afterwards (the
+    * `statestore` source, a restart on the same checkpoint) pass their
+    * own `ckpt`. */
+  private[queries] def drain(df: DataFrame, outputMode: String,
+      ckpt: String = ScratchDirs("graft-stream-ckpt")): DataFrame = {
+    val s = df.sparkSession
+    val qn = DrainViewPrefix + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = df.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .outputMode(outputMode).format("memory").queryName(qn).start()
+    try {
+      q.awaitTermination()
+      val sink = s.table(qn)
+      s.createDataFrame(sink.collectAsList(), sink.schema)
+    } finally {
+      if (q.isActive) q.stop()
+      s.catalog.dropTempView(qn)
+    }
   }
 
   /** Write ONE micro-batch slice: repartition(1) parquet into a
@@ -282,7 +304,7 @@ object ParityQueries {
     // a mis-sorted batch, a lost/duplicated row, or a broken
     // writer→partition mapping all flip the hash.
     "stream_sorted_copy" -> ((s, dir) => withShufflePartitions(s, 4) {
-      import graft.sources.{MemTopic, MemTopicProvider, MemTopicRecordSink}
+      import graft.sources.{MemTopic, MemTopicProvider}
       val uid = java.util.UUID.randomUUID().toString.take(8)
       val srcTopic = s"graft_stream_src_$uid"
       val dstTopic = s"graft_stream_sorted_$uid"
@@ -291,17 +313,18 @@ object ParityQueries {
       MemTopic.create(srcTopic, numPartitions = 3)
       MemTopic.create(dstTopic, numPartitions = 64)
       val c = Tables.customer(s, dir)
-      MemTopicRecordSink(srcTopic).save(c.select(CsvCodec.encode(
-        col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")).as("line")))
+      MemTopic.write(c.select(CsvCodec.encode(
+        col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")).as("line")),
+        srcTopic)
       // streaming read DIRECTLY from the topic (MicroBatchStream — the
       // live O4 form; AvailableNow pins the end offsets at query start)
-      val stream = graft.sources.MemTopicStreamSource(srcTopic).loadStream(s)
+      val stream = MemTopic.readStream(s, srcTopic)
       val decoded = CsvCodec.decode(stream, col("line"), Seq(
         "id" -> LongType, "name" -> StringType,
         "nationkey" -> IntegerType, "segment" -> StringType))
       val ckpt = ScratchDirs("graft-stream-ckpt")
-      graft.streaming.Streaming.sortedCopyToSink(
-        decoded, MemTopicRecordSink(dstTopic), ckpt, Seq(col("id"), col("name")))
+      graft.streaming.Streaming.sortedCopy(
+        decoded, dstTopic, ckpt, Seq(col("id"), col("name")))
         .awaitTermination()
       // the source topic is fully drained and nothing downstream reads
       // it — drop it now; the sorted topic must outlive this call (the
@@ -359,14 +382,7 @@ object ParityQueries {
       // semantics, but not what the DISTINCT oracle states)
       val deduped = graft.streaming.Streaming.dedupStream(
         stream, Seq("user_id"), watermark = "87600 hours")
-      val qn = "stream_dd_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-sdd-ckpt")
-      val q = deduped.select("user_id").writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn).select("user_id").orderBy("user_id")
+      drain(deduped.select("user_id"), "append").orderBy("user_id")
     }),
 
     "stream_windowed_counts" -> ((s, dir) => withShufflePartitions(s, 4) {
@@ -380,14 +396,7 @@ object ParityQueries {
       val schema = s.read.parquet(hand).schema
       val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
       val agg = graft.streaming.Streaming.windowedCounts(stream)
-      val qn = "stream_wc_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-swc-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn)
+      drain(agg, "complete")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("event_type"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))
@@ -418,14 +427,7 @@ object ParityQueries {
         val stream = Tables.withTsMs(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(hand))
         val agg = graft.streaming.Streaming.windowedCounts(stream)
-        val qn = "stream_rdb_" + java.util.UUID.randomUUID().toString.take(8)
-        val ckpt = ScratchDirs("graft-srdb-ckpt")
-        val q = agg.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        snapshotAndDrop(s, qn)
+        drain(agg, "complete")
           .select(unix_millis(col("window_start")).as("window_start_ms"),
             col("event_type"), col("n"),
             round(col("sum_value"), 2).as("sum_value"))
@@ -452,16 +454,9 @@ object ParityQueries {
       val stream = Tables.withTsMs(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(hand))
       val agg = graft.streaming.Streaming.windowedCounts(stream)
-      val qn = "stream_ssi_" + java.util.UUID.randomUUID().toString.take(8)
+      // the graded result is the checkpointed STATE, not the sink
       val ckpt = ScratchDirs("graft-sssi-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      // the graded result is the checkpointed STATE, not the sink — the
-      // memory-sink view still needs dropping (catalog hygiene)
-      s.catalog.dropTempView(qn)
+      drain(agg, "complete", ckpt)
       s.read.format("statestore").load(ckpt)
         .select(unix_millis(col("key.window.start")).as("window_start_ms"),
           col("key.event_type").as("event_type"),
@@ -492,14 +487,8 @@ object ParityQueries {
           val stream = Tables.withTsMs(s.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(hand))
           val agg = graft.streaming.Streaming.windowedCounts(stream)
-          val qn = "stream_scl_" + java.util.UUID.randomUUID().toString.take(8)
           val ckpt = ScratchDirs("graft-sscl-ckpt")
-          val q = agg.writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .outputMode("complete").format("memory").queryName(qn).start()
-          q.awaitTermination()
-          s.catalog.dropTempView(qn)
+          drain(agg, "complete", ckpt)
           s.read.format("statestore")
             .option("readChangeFeed", "true")
             .option("changeStartBatchId", "0")
@@ -537,14 +526,7 @@ object ParityQueries {
         val stream = Tables.withTsMs(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(hand))
         val snapshots = graft.streaming.Streaming.userAccumStream(stream)
-        val qn = "stream_tws_" + java.util.UUID.randomUUID().toString.take(8)
-        val ckpt = ScratchDirs("graft-stws-ckpt")
-        val q = snapshots.toDF().writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        snapshotAndDrop(s, qn)
+        drain(snapshots.toDF(), "append")
           .groupBy(col("user_id"))
           .agg(max(col("n")).as("n"),
             max_by(col("cents"), col("n")).as("cents"),
@@ -578,14 +560,7 @@ object ParityQueries {
       val schema = s.read.parquet(hand).schema
       val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
       val agg = graft.streaming.Streaming.sessionWindowAgg(stream, "30 minutes")
-      val qn = "stream_sw_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-ssw-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn).select("user_id", "sess_start_ms", "sess_end_ms", "n_events")
+      drain(agg, "complete").select("user_id", "sess_start_ms", "sess_end_ms", "n_events")
         .orderBy("user_id", "sess_start_ms")
     }),
 
@@ -607,15 +582,8 @@ object ParityQueries {
       val joined = graft.streaming.Streaming.streamStreamIntervalJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
         lowerMs = 0L, upperMs = 21600000L, watermark = "87600 hours")
-      val qn = "stream_ssj_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-ssj-ckpt")
-      val q = joined.select("l_event", "r_event", "user_id", "l_ts", "r_ts")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn).orderBy("l_event", "r_event")
+      drain(joined.select("l_event", "r_event", "user_id", "l_ts", "r_ts"), "append")
+        .orderBy("l_event", "r_event")
     }),
 
     // Stream–static enrichment graded: events arrive as 3 staged files
@@ -637,14 +605,7 @@ object ParityQueries {
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey").as("user_id"), col("c_name"), col("c_mktsegment"))
       val enriched = graft.streaming.Streaming.enrichStream(stream, dim, Seq("user_id"))
-      val qn = "stream_en_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-sen-ckpt")
-      val q = enriched.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn)
+      drain(enriched, "append")
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value"), 4).as("value_r"), col("c_name"), col("c_mktsegment"))
         .orderBy("event_id")
@@ -673,15 +634,8 @@ object ParityQueries {
       val joined = graft.streaming.Streaming.streamStreamLeftOuterJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
         lowerMs = 0L, upperMs = 21600000L, watermark = "1 hour")
-      val qn = "stream_oj_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-soj-ckpt")
-      val q = joined.select("l_event", "r_event", "user_id", "l_ts", "r_ts")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn).orderBy(col("l_event"), col("r_event").asc_nulls_first)
+      drain(joined.select("l_event", "r_event", "user_id", "l_ts", "r_ts"), "append")
+        .orderBy(col("l_event"), col("r_event").asc_nulls_first)
     }),
 
     // foreachBatch MERGE SINK graded: the production pattern for
@@ -703,7 +657,7 @@ object ParityQueries {
         .option("maxFilesPerTrigger", "1").parquet(hand)
       val ckpt = ScratchDirs("graft-sus-ckpt")
       val q = stream.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
           val delta = batch
@@ -763,7 +717,7 @@ object ParityQueries {
         .option("maxFilesPerTrigger", "1").parquet(hand)
       val ckpt = ScratchDirs("graft-svs-ckpt")
       val q = stream.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
           val delta = batch
@@ -805,14 +759,7 @@ object ParityQueries {
       val schema = s.read.parquet(hand).schema
       val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
       val agg = graft.streaming.Streaming.slidingCounts(stream)
-      val qn = "stream_slw_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-slw-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn)
+      drain(agg, "complete")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("event_type"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))
@@ -837,20 +784,11 @@ object ParityQueries {
       val regs = graft.operators.Sketches.hllRegisters(
         stream.select(col("event_type"), col("user_id")),
         "event_type", col("user_id"))
-      val qn = "stream_hll_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-shll-ckpt")
-      val q = regs.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      // Snapshot the sink before finalizing: hllEstimate self-joins the
-      // registers against their own group spine, and the memory-sink
-      // VIEW exposes identical attribute ids on both sides (analyzer
-      // conflict). The sink is sketch-sized (|types|·256 rows), so a
-      // local snapshot is exact and bounded; the view is dropped.
-      val snap = snapshotAndDrop(s, qn)
-      graft.operators.Sketches.hllEstimate(snap, "event_type")
+      // finalize the LOCAL snapshot, never the sink: hllEstimate
+      // self-joins the registers against their own group spine, and the
+      // memory-sink VIEW exposes identical attribute ids on both sides
+      // (analyzer conflict). The sink is sketch-sized (|types|·256 rows).
+      graft.operators.Sketches.hllEstimate(drain(regs, "complete"), "event_type")
         .orderBy("event_type")
     }),
 
@@ -891,14 +829,7 @@ object ParityQueries {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(hand)
       val agg = graft.streaming.Streaming.windowedCounts(stream)
-      val qn = "stream_ld_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-sld-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn)
+      drain(agg, "append")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("event_type"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))
@@ -927,14 +858,7 @@ object ParityQueries {
         .as[graft.streaming.Streaming.Tick]
       val gaps = graft.streaming.Streaming
         .gapDetectStream(ticks, bucketMs = 3600000L)
-      val qn = "stream_gd_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-sgd-ckpt")
-      val q = gaps.toDF().writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn).select(col("key"), col("bucket_ms"))
+      drain(gaps.toDF(), "append").select(col("key"), col("bucket_ms"))
         .orderBy("key", "bucket_ms")
     }),
 
@@ -960,14 +884,7 @@ object ParityQueries {
         .as[graft.streaming.Streaming.Evt]
       val sessions = graft.streaming.Streaming
         .sessionize(evts, gapMs = 1800000L)
-      val qn = "stream_cs_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-scs-ckpt")
-      val q = sessions.toDF().writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      snapshotAndDrop(s, qn)
+      drain(sessions.toDF(), "append")
         .select(col("user_id"), col("sess_start_ms"), col("sess_end_ms"),
           col("n_events"))
         .orderBy("user_id", "sess_start_ms")
@@ -996,19 +913,7 @@ object ParityQueries {
           .option("maxFilesPerTrigger", "1").parquet(hand)
         val closes = graft.streaming.Streaming
           .dayCloseStream(stream, gapMs = 3600007L)
-        val qn = "stream_tmr_" + java.util.UUID.randomUUID().toString.take(8)
-        // ScratchDirs + snapshotAndDrop: checkpoint tree removed on JVM
-        // exit, memory-sink view dropped after the local snapshot — the
-        // form every stream_* query now uses (the round-12 hygiene
-        // migration closed the raw-createTempDirectory/undropped-view
-        // debt this comment used to concede)
-        val ckpt = ScratchDirs("graft-stmr-ckpt")
-        val q = closes.toDF().writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        snapshotAndDrop(s, qn).orderBy("user_id", "day")
+        drain(closes.toDF(), "append").orderBy("user_id", "day")
       }
     }),
 
@@ -1045,21 +950,14 @@ object ParityQueries {
         hand, k, base, "graft-srr")
       stage(1); stage(2)
       val schema = s.read.parquet(hand).schema
-      def run(qn: String): DataFrame = {
-        val stream = s.readStream.schema(schema).parquet(hand)
-        val agg = graft.streaming.Streaming.windowedCounts(stream)
-        val q = agg.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        snapshotAndDrop(s, qn)
-      }
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val first = run(s"stream_rr1_$uid")
+      def run(): DataFrame = drain(
+        graft.streaming.Streaming.windowedCounts(
+          s.readStream.schema(schema).parquet(hand)),
+        "complete", ckpt)
+      val first = run()
       val commits1 = ckptCommits(ckpt)
       stage(3)
-      val fin = run(s"stream_rr2_$uid")
+      val fin = run()
       val commits2 = ckptCommits(ckpt)
       // the restart proves nothing unless run 1 was genuinely partial
       // and run 2 genuinely RESUMED (old commits intact, new ones
@@ -1120,7 +1018,7 @@ object ParityQueries {
           val stream = s.readStream.schema(schema).parquet(hand)
           val snaps = graft.streaming.Streaming.userAccumStream(stream)
           val q = snaps.toDF().writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .option("checkpointLocation", ckpt)
             .outputMode("append")
             .format("parquet").option("path", outDir)
@@ -1186,14 +1084,8 @@ object ParityQueries {
           sum(col("r_ts") - col("l_ts")).as("sum_lag_ms"))
         .select(unix_millis(col("window.start")).as("win_ms"),
           col("n_pairs"), col("sum_lag_ms"))
-      val qn = "stream_jtw_" + java.util.UUID.randomUUID().toString.take(8)
       val ckpt = ScratchDirs("graft-sjtw-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").format("memory").queryName(qn).start()
-      q.awaitTermination()
-      val closed = snapshotAndDrop(s, qn)
+      val closed = drain(agg, "append", ckpt)
       val open = s.read.format("statestore")
         .option("operatorId", "0").load(ckpt)
         .select(unix_millis(col("key.window.start")).as("win_ms"),
@@ -1275,19 +1167,13 @@ object ParityQueries {
       val agg = graft.streaming.Streaming.windowedCounts(stream)
         .withColumn("n", graft.streaming.FaultInjection.faultOnce(tag, retried)(
           col("n"), unix_millis(col("window_start")) >= lit(lo3Ms)))
-      val qn = "stream_tr_" + java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = ScratchDirs("graft-str-ckpt")
-      val q = agg.writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").format("memory").queryName(qn).start()
-      q.awaitTermination()
+      val fin = drain(agg, "complete")
       require(graft.streaming.FaultInjection.consumed(tag),
         "injected fault never fired: the marker row was never evaluated " +
           "on a first-attempt task")
       require(retried.value > 0,
         "no task attempt > 0 completed: the failure was not retried")
-      snapshotAndDrop(s, qn)
+      fin
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("event_type"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))

@@ -2862,8 +2862,8 @@ object TrainingDataQueries {
       val docs = Tables.documents(s, dir)
       val path = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_jsonl_" + dir.replaceAll("[^A-Za-z0-9.]", "_")).getPath
-      graft.sources.JsonlSink(path).save(docs)
-      graft.sources.JsonlSource(path, docs.schema).load(s).orderBy("doc_id")
+      docs.write.mode("overwrite").json(path)
+      s.read.schema(docs.schema).json(path).orderBy("doc_id")
     }),
 
     // ORC round-trip — the OTHER columnar format big estates carry
@@ -3634,14 +3634,7 @@ object TrainingDataQueries {
           .option("maxFilesPerTrigger", "1").parquet(hand)
         val pairs = graft.streaming.Streaming.minhashNearDupStream(
           stream, "doc_id", "text", "ts_ms", watermark = "87600 hours")
-        val qn = "stream_nd_" + java.util.UUID.randomUUID().toString.take(8)
-        val ckpt = ParityQueries.ScratchDirs("graft-sndp-ckpt")
-        val q = pairs.toDF().writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        ParityQueries.snapshotAndDrop(s, qn)
+        ParityQueries.drain(pairs.toDF(), "append")
           .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
           .orderBy("doc_a", "doc_b")
       }),
@@ -3676,17 +3669,9 @@ object TrainingDataQueries {
               lit(1023L)).as("bucket"))
           .groupBy(col("event_type"), col("bucket"))
           .agg(count(lit(1)).as("cnt"))
-        val qn = "stream_qh_" + java.util.UUID.randomUUID().toString.take(8)
-        val ckpt = ParityQueries.ScratchDirs("graft-sqh-ckpt")
-        val q = hist.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .outputMode("complete").format("memory").queryName(qn).start()
-        q.awaitTermination()
-        // Snapshot the sketch-sized sink (|types|·1024 rows, bounded by
-        // construction) before the batch-side quantile extraction —
-        // the stream_hll memory-sink convention (view dropped).
-        val snap = ParityQueries.snapshotAndDrop(s, qn)
+        // the sink is sketch-sized (|types|·1024 rows, bounded by
+        // construction); the quantile extraction runs on its snapshot
+        val snap = ParityQueries.drain(hist, "complete")
         val tot = snap.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
         val wCum = Window.partitionBy("event_type").orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, 0)

@@ -14,6 +14,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,7 +39,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Single-JVM by design (a test/teaching transport — `local[n]` shares
   * one heap); swap `format(classOf[MemTopicProvider].getName)` for
-  * `format("kafka")` and the same plans run against a broker.
+  * `format("kafka")` in [[write]] and [[readStream]] and the same plans
+  * run against a broker. The reference's transport settings
+  * (`internal/kafka/client.go`) then become options: `kafka.bootstrap.servers`
+  * and `subscribe` (or `topic` on write), `startingOffsets=earliest` and
+  * `endingOffsets=latest` on a bounded read, and `kafka.compression.type=snappy`
+  * and `kafka.acks=1` on write; the `value` column is binary there, so
+  * `line` is cast to and from it.
   */
 object MemTopic {
   /** Read schema ≙ the Kafka source's projection the sorter consumes. */
@@ -86,6 +93,20 @@ object MemTopic {
     val buf = part(topic, p)
     buf.synchronized { buf.slice(start.toInt, end.toInt).toArray }
   }
+
+  /** Atomic batched append of `df`'s `line` column to `topic` (the
+    * reference's producer, O3/O10). */
+  def write(df: DataFrame, topic: String): Unit =
+    df.select(col("line").cast("string").as("value"))
+      .write.format(classOf[MemTopicProvider].getName)
+      .option("topic", topic).mode("append").save()
+
+  /** Streaming read of `topic` as one `line` column (the live form of
+    * the bounded O4 scan, [[MemTopicMicroBatchStream]]). */
+  def readStream(spark: SparkSession, topic: String): DataFrame =
+    spark.readStream.format(classOf[MemTopicProvider].getName)
+      .option("topic", topic).load()
+      .select(col("value").as("line"))
 }
 
 /** `spark.read.format(classOf[MemTopicProvider].getName)
@@ -249,33 +270,4 @@ private[sources] class MemTopicWriterFactory(nParts: Int, valueIdx: Int)
       override def abort(): Unit = buf.clear()
       override def close(): Unit = ()
     }
-}
-
-/** The topic transport behind the same [[RecordSource]]/[[RecordSink]]
-  * traits the file and Kafka legs use. */
-final case class MemTopicRecordSource(topic: String) extends RecordSource {
-  def load(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.read.format(classOf[MemTopicProvider].getName)
-      .option("topic", topic).load()
-      .select(col("value").as("line"))
-  }
-}
-
-/** Streaming read of the topic (MicroBatchStream) behind the same
-  * [[StreamRecordSource]] trait as the file and Kafka streaming legs. */
-final case class MemTopicStreamSource(topic: String) extends StreamRecordSource {
-  def loadStream(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.readStream.format(classOf[MemTopicProvider].getName)
-      .option("topic", topic).load()
-      .select(col("value").as("line"))
-  }
-}
-
-final case class MemTopicRecordSink(topic: String) extends RecordSink {
-  def save(df: DataFrame): Unit =
-    df.select(org.apache.spark.sql.functions.col("line").cast("string").as("value"))
-      .write.format(classOf[MemTopicProvider].getName)
-      .option("topic", topic).mode("append").save()
 }

@@ -17,71 +17,39 @@ import org.apache.spark.sql.types.StructType
   * per sink commit — never a wall-clock heuristic (SURVEY.md §7.4
   * risk 3).
   *
-  * Sources here are file-based (the Kafka connector jar is not in this
-  * build's offline classpath); the Kafka leg swaps
-  * `readStream.format("kafka").option("subscribe", …)` for
-  * `readStream.schema(…).parquet(dir)` with zero operator changes —
-  * see [[graft.sources.Connectors]].
+  * Sources here are parquet directories and the in-heap MemTopic (the
+  * Kafka connector jar is not in this build's offline classpath). Every
+  * operator takes an already-loaded streaming DataFrame, so the Kafka
+  * leg swaps `readStream.format("kafka").option("subscribe", …)` in with
+  * zero operator changes — see [[graft.sources.MemTopic]].
   */
 object Streaming {
 
-  /** EP2 as a stream: bounded sorted copy. Each micro-batch is sorted and
-    * written; with `AvailableNow` over a static input this reproduces
-    * the reference's "sort the whole bounded topic" run, and on a live
+  /** EP2 as a stream, into a topic (reference O4 → O7–O10): each
+    * micro-batch of `stream` is range-partition total-sorted and
+    * appended to the MemTopic `topic` ([[graft.sources.MemTopic.write]])
+    * with writer→partition identity (task i → topic partition i,
+    * provided the topic has ≥ task-count partitions), so for a
+    * single-batch `AvailableNow` run the (partition, offset) read order
+    * IS the global sort order — the "single ordered topic" form the
+    * reference validates (`scripts/test_validation.sh`). On a live
     * source it degrades gracefully to per-batch ordering (global total
     * order across an unbounded stream is undefined — the reference can
-    * only do it because its input is bounded).
-    *
-    * Delivery: each batch OVERWRITES a path derived from its batchId, so
-    * a micro-batch retried after a partial write is idempotent — a plain
-    * `mode("append")` here would be at-least-once (retried batches would
-    * re-append rows). Readers of `outDir` see one extra partition-
-    * discovery column `batch` (the micro-batch id); ids are zero-padded
-    * so lexicographic directory listing preserves batch order past
-    * batch 9. */
-  def sortedCopy(spark: SparkSession, inDir: String, schema: StructType,
-                 outDir: String, checkpointDir: String,
-                 sortCols: Seq[String]): StreamingQuery =
-    sortedCopyStream(
-      graft.sources.ParquetStreamSource(inDir, schema).loadStream(spark),
-      outDir, checkpointDir, sortCols)
-
-  /** EP2's topic-sink leg (reference O10): streaming sorted copy INTO a
-    * [[graft.sources.RecordSink]] (MemTopic offline; Kafka when the
-    * connector jar is present — both take a one-column `line` frame).
-    * Each micro-batch is range-partition total-sorted and appended with
-    * writer→partition identity (task i → topic partition i, provided
-    * the topic has ≥ task-count partitions), so for a single-batch
-    * `AvailableNow` run the (partition, offset) read order IS the
-    * global sort order — the "single ordered topic" form the reference
-    * validates (`scripts/test_validation.sh`). The batch must carry `line`
-    * plus the sort columns; only `line` reaches the sink. */
-  def sortedCopyToSink(stream: DataFrame, sink: graft.sources.RecordSink,
-                       checkpointDir: String,
-                       sortCols: Seq[Column]): StreamingQuery =
+    * only do it because its input is bounded). The batch must carry
+    * `line` plus the sort columns; only `line` reaches the topic.
+    * Delivery: each batch's append commits atomically, but a batch
+    * replayed after its append committed (a restart between the sink
+    * commit and the checkpoint commit) appends again — at-least-once,
+    * like a non-transactional Kafka producer. */
+  def sortedCopy(stream: DataFrame, topic: String, checkpointDir: String,
+                 sortCols: Seq[Column]): StreamingQuery =
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.save(graft.operators.Sorting.totalSort(batch, sortCols: _*)
-          .select("line"))
-      }
-      .start()
-
-  /** Transport-agnostic core of [[sortedCopy]]: takes the already-loaded
-    * STREAMING DataFrame (any [[graft.sources.StreamRecordSource]] —
-    * file, Kafka, or an in-memory test stream), so the sort/sink logic
-    * is provably independent of the transport (ConnectorsSpec runs it
-    * over a MemoryStream-backed source). */
-  def sortedCopyStream(stream: DataFrame, outDir: String,
-                       checkpointDir: String,
-                       sortCols: Seq[String]): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.orderBy(sortCols.map(col): _*)
-          .write.mode("overwrite").parquet(f"$outDir/batch=$batchId%09d")
+        graft.sources.MemTopic.write(
+          graft.operators.Sorting.totalSort(batch, sortCols: _*).select("line"),
+          topic)
       }
       .start()
 
@@ -149,9 +117,11 @@ object Streaming {
     * survivors are written.
     *
     * The corpus lives as parquet under `corpusDir/batch=N/` — each
-    * micro-batch OVERWRITES its own batch path, so retries are
-    * idempotent (the [[sortedCopyStream]] delivery contract), and the
-    * corpus read is a plain partition-discovery scan. At 100 TB the
+    * micro-batch OVERWRITES its own batch path, so a micro-batch
+    * retried after a partial write is idempotent (a plain append would
+    * be at-least-once), and the corpus read is a plain
+    * partition-discovery scan; batch ids are zero-padded so the
+    * directory listing keeps batch order. At 100 TB the
     * corpus side of the match joins pre-indexed band keys instead of
     * re-signing every document per batch — the signature index is the
     * corpus-maintenance analog of a search index.
@@ -199,12 +169,13 @@ object Streaming {
     * files landing in `inDir` are parsed PERMISSIVEly against the
     * explicit schema; good rows land under `goodDir/batch=N/`, the RAW
     * text of unparseable lines under `quarantineDir/batch=N/`. Nothing
-    * kills the stream, nothing is silently dropped, and per-batch
-    * overwrite keeps retries idempotent (the [[sortedCopyStream]]
-    * delivery contract). The batch is pinned with `persist` before the
-    * two writes: the quarantine write projects ONLY the corrupt column,
-    * and an unpinned plan would re-read the files under the
-    * corrupt-column-only pruning Spark disallows for raw JSON scans. */
+    * kills the stream, nothing is silently dropped, and overwriting
+    * the path derived from the batch id keeps a retried micro-batch
+    * idempotent (a plain append would re-append its rows). The batch
+    * is pinned with `persist` before the two writes: the quarantine
+    * write projects ONLY the corrupt column, and an unpinned plan
+    * would re-read the files under the corrupt-column-only pruning
+    * Spark disallows for raw JSON scans. */
   def jsonlIngestStream(spark: SparkSession, inDir: String, schema: StructType,
                         goodDir: String, quarantineDir: String,
                         checkpointDir: String): StreamingQuery = {

@@ -370,7 +370,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
+    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = Session.local()
 
     val sb = new StringBuilder

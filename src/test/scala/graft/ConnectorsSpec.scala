@@ -7,12 +7,12 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.CsvCodec
 import graft.operators.Sorting
-import graft.sources.{AvroIngest, AvroSplitProvider, CsvLineSource, KafkaSource, ParquetSink, RecordGenerator}
+import graft.sources.{AvroIngest, AvroSplitProvider, MemTopic, MemTopicProvider, RecordGenerator}
 
-/** EP2 through the file transport: CSV lines in → key extraction →
-  * total sort → sink — the reference pipeline with Parquet/text standing
-  * in for the Kafka topic (connector jar absent in this offline build,
-  * which KafkaSource.available reports). */
+/** EP2 through the file and MemTopic transports: CSV lines in → key
+  * extraction → total sort → sink — the reference pipeline with
+  * Parquet/text or the in-heap topic standing in for the Kafka topic
+  * (connector jar absent in this offline build). */
 class ConnectorsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,12 +22,12 @@ class ConnectorsSpec extends SparkSpec {
     RecordGenerator.csvLines(spark, 1000, seed = 5)
       .select("line").write.mode("overwrite").text(in)
 
-    val lines = CsvLineSource(in).load(spark)
+    val lines = spark.read.text(in).select(col("value").as("line"))
     val decoded = CsvCodec.decode(lines, col("line"), Seq(
       "id" -> IntegerType, "name" -> StringType,
       "address" -> StringType, "continent" -> StringType))
-    ParquetSink(out).save(
-      Sorting.totalSort(decoded, col("id"), col("name")).select("line"))
+    Sorting.totalSort(decoded, col("id"), col("name")).select("line")
+      .write.mode("overwrite").parquet(out)
 
     val sorted = spark.read.parquet(out)
     assert(sorted.count() === 1000)
@@ -37,34 +37,43 @@ class ConnectorsSpec extends SparkSpec {
     assert(inBag.sameElements(outBag))
   }
 
-  test("MemoryStream-backed StreamRecordSource drives sortedCopy — non-file transport") {
+  /** Bounded (offset-capped) batch read of a topic's values. */
+  private def topicLines(topic: String) =
+    spark.read.format(classOf[MemTopicProvider].getName)
+      .option("topic", topic).load()
+      .select(col("value").as("line"))
+
+  test("MemoryStream of CSV lines drives the topic sortedCopy — non-file transport") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.sources.{StreamRecordSource, WrappedStreamSource}
     import graft.streaming.Streaming
 
-    val ms = MemoryStream[(Int, String)](spark)
-    ms.addData((3, "cc"), (1, "aa"), (2, "bb"), (5, "ee"), (4, "dd"))
-    val src: StreamRecordSource =
-      WrappedStreamSource(ms.toDF().toDF("id", "name"))
+    val lines = Seq("3,cc", "1,aa", "2,bb", "5,ee", "4,dd", "10,jj", "7,gg")
+    val ms = MemoryStream[String](spark)
+    ms.addData(lines)
+    val decoded = CsvCodec.decode(ms.toDF().toDF("line"), col("line"),
+      Seq("id" -> IntegerType, "name" -> StringType))
 
-    val out = Files.createTempDirectory("graft-ms-out").toString
-    val ckpt = Files.createTempDirectory("graft-ms-ckpt").toString
-    val q = Streaming.sortedCopyStream(src.loadStream(spark), out, ckpt, Seq("id"))
-    q.awaitTermination()
+    MemTopic.create("ms_sorted", numPartitions = 8)
+    try {
+      val ckpt = Files.createTempDirectory("graft-ms-ckpt").toString
+      Streaming.sortedCopy(decoded, "ms_sorted", ckpt, Seq(col("id")))
+        .awaitTermination()
 
-    val got = spark.read.parquet(out)
-    assert(got.count() === 5)
-    // multiset conservation through the in-memory transport
-    assert(got.select("id").as[Int].collect().sorted.toSeq === Seq(1, 2, 3, 4, 5))
-    // each batch directory is internally sorted by the key
-    val batch0 = spark.read.parquet(s"$out/batch=000000000")
-      .select("id").as[Int].collect()
-    assert(batch0.sameElements(batch0.sorted))
+      // (partition, offset) order is the validation consumer's view;
+      // the sorted copy makes it the global key order
+      val ids = spark.read.format(classOf[MemTopicProvider].getName)
+        .option("topic", "ms_sorted").load()
+        .orderBy("partition", "offset")
+        .select(CsvCodec.fieldAs(col("value"), 0, IntegerType))
+        .as[Int].collect()
+      assert(ids.toSeq === Seq(1, 2, 3, 4, 5, 7, 10))
+      // payload passthrough: exactly the fed lines reach the topic
+      assert(topicLines("ms_sorted").as[String].collect().sorted.toSeq ===
+        lines.sorted)
+    } finally MemTopic.drop("ms_sorted")
   }
 
   test("MemTopic DSv2: produce -> bounded scan -> total sort -> sink, reference EP1+EP2") {
-    import graft.sources.{MemTopic, MemTopicRecordSink, MemTopicRecordSource}
-
     MemTopic.create("source", numPartitions = 3)
     // ≥ shuffle partitions: the sink maps write task i → topic
     // partition i % n, so with n ≥ tasks the mapping is the identity
@@ -74,28 +83,27 @@ class ConnectorsSpec extends SparkSpec {
     MemTopic.create("sorted_id", numPartitions = 8)
     try {
       // EP1: produce generated CSV records into the partitioned topic
-      MemTopicRecordSink("source").save(
-        RecordGenerator.csvLines(spark, 600, seed = 11).select("line"))
+      MemTopic.write(
+        RecordGenerator.csvLines(spark, 600, seed = 11).select("line"), "source")
 
       // EP2: bounded scan -> key extraction -> total sort -> sink
-      val src = MemTopicRecordSource("source").load(spark)
+      val src = topicLines("source")
       val sorted = Sorting.totalSort(
         CsvCodec.decode(src, col("line"), Seq(
           "id" -> IntegerType, "name" -> StringType,
           "address" -> StringType, "continent" -> StringType)),
         col("id"), col("name"))
-      MemTopicRecordSink("sorted_id").save(sorted.select("line"))
+      MemTopic.write(sorted.select("line"), "sorted_id")
 
       // offset-bounded read (the drain-heuristic replacement): every
       // ACTION plans a fresh consistent [0, latest-at-plan) snapshot
       // and terminates — it never tail-chases or truncates on a slow
       // source like the reference's 5s-idle heuristic can
-      val bounded = MemTopicRecordSource("sorted_id").load(spark)
+      val bounded = topicLines("sorted_id")
       assert(bounded.count() === 600)
 
       // multiset conservation through both topic hops
-      val inBag = MemTopicRecordSource("source").load(spark)
-        .as[String].collect().sorted
+      val inBag = topicLines("source").as[String].collect().sorted
       val outBag = bounded.as[String].collect().sorted
       assert(inBag.sameElements(outBag))
 
@@ -105,7 +113,7 @@ class ConnectorsSpec extends SparkSpec {
 
       // the sorted topic is globally ordered when read back in
       // (partition, offset) order — the validation consumer's view
-      val ids = spark.read.format(classOf[graft.sources.MemTopicProvider].getName)
+      val ids = spark.read.format(classOf[MemTopicProvider].getName)
         .option("topic", "sorted_id").load()
         .filter(col("value") =!= "999999,zzz,late row,Asia")
         .orderBy("partition", "offset")
@@ -119,7 +127,6 @@ class ConnectorsSpec extends SparkSpec {
   test("MemTopic MicroBatchStream: offset-tracked micro-batches, resume from checkpoint") {
     import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.{MemTopic, MemTopicStreamSource}
 
     MemTopic.create("mbs", numPartitions = 2)
     try {
@@ -128,7 +135,7 @@ class ConnectorsSpec extends SparkSpec {
       val out = Files.createTempDirectory("graft-mbs-out").toString
       val ckpt = Files.createTempDirectory("graft-mbs-ckpt").toString
       def run(): Unit = {
-        val q = MemTopicStreamSource("mbs").loadStream(spark)
+        val q = MemTopic.readStream(spark, "mbs")
           .writeStream.trigger(Trigger.AvailableNow())
           .option("checkpointLocation", ckpt)
           .format("parquet").option("path", out).start()
@@ -146,12 +153,6 @@ class ConnectorsSpec extends SparkSpec {
       assert(all.toSeq === Seq("a", "b", "c", "d", "e", "f"),
         "second run must append exactly the post-checkpoint delta")
     } finally MemTopic.drop("mbs")
-  }
-
-  test("Kafka connector availability is reported, not assumed") {
-    // this offline build has no spark-sql-kafka jar; the source must
-    // detect that rather than fail at plan time
-    assert(!KafkaSource.available)
   }
 
   test("AvroSplit: block-split read is exact for EVERY split size") {

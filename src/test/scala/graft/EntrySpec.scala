@@ -31,6 +31,13 @@ class EntrySpec extends SparkSpec {
         fail(s"query $name failed analysis: ${e.getMessage}")
       }
     }
+    // stream hygiene: every stream_* query ran to completion inside its
+    // builder and left neither a running query nor its memory-sink view
+    assert(spark.streams.active.isEmpty,
+      s"streams left running: ${spark.streams.active.map(_.name).mkString(", ")}")
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(graft.queries.ParityQueries.DrainViewPrefix))
+    assert(views.isEmpty, s"memory-sink views left in the catalog: ${views.mkString(", ")}")
   }
 
   test("q_table_fingerprint is invariant to partitioning and row order") {

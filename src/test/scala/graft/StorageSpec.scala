@@ -84,7 +84,6 @@ class StorageSpec extends SparkSpec {
 
   test("JSONL roundtrip is byte-faithful for adversarial text (newlines, quotes, unicode)") {
     import spark.implicits._
-    import graft.sources.{JsonlSink, JsonlSource}
     val nasty = Seq(
       (1L, "line one\nline two\r\nthird"),
       (2L, "quote \" and backslash \\ and tab\t end"),
@@ -93,8 +92,8 @@ class StorageSpec extends SparkSpec {
       (5L, ""))
       .toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft-jsonl").toString + "/docs"
-    JsonlSink(dir).save(nasty)
-    val back = JsonlSource(dir, nasty.schema).load(spark)
+    nasty.write.mode("overwrite").json(dir)
+    val back = spark.read.schema(nasty.schema).json(dir)
     // one record per line even with embedded newlines (they're escaped)
     val lines = spark.read.text(dir).count()
     assert(lines === 5, s"expected 5 JSONL lines, got $lines")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.LongType
 
 import graft.sources.Tables
 import graft.streaming.Streaming
@@ -16,23 +17,33 @@ class StreamingSpec extends SparkSpec {
     Files.createTempDirectory(prefix).toString
 
   test("sortedCopy: AvailableNow run-to-completion sorted copy of a bounded input") {
+    import graft.functions.CsvCodec
+    import graft.sources.{MemTopic, MemTopicProvider}
     val in = tmp("graft-in")
-    val out = tmp("graft-out")
     val ckpt = tmp("graft-ckpt")
     val src = Tables.events(spark, sf("sf0.001"))
       .select("event_id", "user_id", "event_type", "ts_ms")
     src.write.mode("overwrite").parquet(in)
     val schema = spark.read.parquet(in).schema
+    val stream = spark.readStream.schema(schema).parquet(in)
+      .withColumn("line",
+        CsvCodec.encode(col("user_id"), col("event_id"), col("event_type")))
 
-    val q = Streaming.sortedCopy(spark, in, schema, out, ckpt,
-      Seq("user_id", "event_id"))
-    q.awaitTermination(120000)
+    // partitions ≥ the sort's task count: writer i → topic partition i
+    MemTopic.create("sorted_copy_events", numPartitions = 8)
+    try {
+      Streaming.sortedCopy(stream, "sorted_copy_events", ckpt,
+        Seq(col("user_id"), col("event_id"))).awaitTermination(120000)
 
-    val got = spark.read.parquet(out)
-    assert(got.count() === src.count(), "row-count conservation through the stream")
-    // the reference's validation (O12): key sequence monotone in file order
-    val keys = got.select("user_id").as[Long].collect()
-    assert(keys.sameElements(keys.sorted), "sorted within the AvailableNow batch")
+      val got = spark.read.format(classOf[MemTopicProvider].getName)
+        .option("topic", "sorted_copy_events").load()
+      assert(got.count() === src.count(), "row-count conservation through the stream")
+      // the reference's validation (O12): key sequence monotone in
+      // (partition, offset) order
+      val keys = got.orderBy("partition", "offset")
+        .select(CsvCodec.fieldAs(col("value"), 0, LongType)).as[Long].collect()
+      assert(keys.sameElements(keys.sorted), "sorted within the AvailableNow batch")
+    } finally MemTopic.drop("sorted_copy_events")
   }
 
   test("enrichStream: stream-static dimension join equals the batch join") {

@@ -28,12 +28,16 @@ cd "$(dirname "$0")/.."
 if [ -n "${SPARK_HOME:-}" ]; then JARS="$SPARK_HOME/jars"
 else JARS="$(sed -n 's/.*unmanagedBase *:= *file("\([^"]*\)").*/\1/p' build.sbt)"
 fi
+# Bench's stderr holds Spark's log and Bench's own "[bench] ..." lines
+# (a failed query, an unknown name); only the latter reach the caller
+ERR="$(mktemp)"; trap 'rm -f "$ERR"' EXIT
 SPARK_GRAFT_ONLY="$NAMES" \
 SPARK_GRAFT_CPUS="$CPUS" \
 SPARK_GRAFT_SKIP_OUTFILE=1 \
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP:$JARS/*" graft.Bench \
-  2>/dev/null | grep -v '^\[' | tail -1 > "$OUT"
+  2>"$ERR" | grep -v '^\[' | tail -1 > "$OUT"
 status=${PIPESTATUS[0]}
+grep '^\[bench\]' "$ERR" >&2
 if [ "$status" -ne 0 ]; then echo "$0: graft.Bench exited $status" >&2; exit "$status"; fi
