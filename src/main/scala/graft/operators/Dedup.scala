@@ -427,7 +427,7 @@ object Dedup {
     // the previous round's labels. decimal(38,0) cannot overflow on
     // any realistic id domain (2^63 ids × 2^63 each < 10^38).
     def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("component").cast("decimal(38,0)"))).head.get(0)
+      val v = df.agg(sum(col("component").cast("decimal(38,0)"))).head().get(0)
       if (v == null) java.math.BigDecimal.ZERO
       else v.asInstanceOf[java.math.BigDecimal]
     }

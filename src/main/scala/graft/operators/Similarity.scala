@@ -358,8 +358,9 @@ object Similarity {
   def planeSigns(p: Int, dim: Int): Seq[Double] =
     (0 until dim).map { i =>
       // Deterministic pseudo-random sign from (p, i); any fixed mixing
-      // function works — this is scala.util.hashing.MurmurHash3 on a pair.
-      val h = scala.util.hashing.MurmurHash3.productHash((p, i))
+      // function works — this is scala.util.hashing.MurmurHash3 on a pair,
+      // and SimilaritySpec pins the signs it gives.
+      val h = scala.util.hashing.MurmurHash3.caseClassHash((p, i))
       if ((h & 1) == 0) 1.0 else -1.0
     }
 

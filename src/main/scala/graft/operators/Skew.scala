@@ -29,7 +29,7 @@ object Skew {
     // duplicate/drop rows when map tasks are recomputed after a fetch
     // failure — the SPARK-23207 class of bug.
     val saltedBig = big.withColumn("__salt",
-      pmod(xxhash64(big.columns.map(col): _*), lit(salts)))
+      pmod(xxhash64(big.columns.toSeq.map(col): _*), lit(salts)))
     val replicatedSmall = small.withColumn("__salt",
       explode(expr(s"sequence(0, ${salts - 1})")))
     saltedBig.join(replicatedSmall, keys :+ "__salt").drop("__salt")

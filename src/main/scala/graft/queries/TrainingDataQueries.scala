@@ -2919,7 +2919,7 @@ object TrainingDataQueries {
     "ingest_quarantine" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val lines = docs.select(col("doc_id"),
-          to_json(struct(docs.columns.map(col): _*)).as("js"))
+          to_json(struct(docs.columns.toSeq.map(col): _*)).as("js"))
         .select(when(col("doc_id") % 10 === 0, expr("substring(js, 1, 10)"))
           .otherwise(col("js")).as("value"))
       val path = new java.io.File(sys.props("java.io.tmpdir"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CsvCodec
+import graft.plans.HashChars
 
 /** Deterministic synthetic record source — the reference's producer
   * (`internal/data/generator.go:22-58`, `cmd/producer/main.go:20-67`)
@@ -73,34 +74,22 @@ object RecordGenerator {
 
   /** Volume variant for throughput runs: same domains, but driven by
     * `xxhash64` with base-N digit decomposition — one 64-bit hash yields
-    * ~10 characters, so generating a record costs ~6 hashes instead of
-    * ~35 md5s. Not oracle-replayable (DuckDB lacks xxhash64); the graded
-    * [[records]] path stays md5-based. */
+    * 10 characters, so a record costs at most 8 hashes instead of ~35 md5s.
+    * `name` and `address` are each one [[HashChars]] expression, whose
+    * generated code is a single call per row; `id` and `continent` are
+    * one `xxhash64` each. Not oracle-replayable (DuckDB lacks xxhash64);
+    * the graded [[records]] path stays md5-based. */
   def recordsFast(spark: SparkSession, n: Long, seed: Long = 42,
                   numPartitions: Int = 32): DataFrame = {
     def h(tag: String): String = s"xxhash64($seed, '$tag', row_id)"
-    // Fully codegen'd (no higher-order functions): emit maxLen fixed
-    // per-position chars — position i is a base-m digit of one of two
-    // 64-bit hashes (CSE dedupes the repeated xxhash64 calls) — then take
-    // the length-prefix. ~6 hash evaluations + string ops per field.
-    def fastString(tag: String, chars: String, minLen: Int, spread: Int): String = {
-      val m = chars.length // one 64-bit hash yields 10 base-m digits (m <= 63)
-      val charExprs = (0 until minLen + spread - 1).map { i =>
-        val hc = h(s"$tag${i / 10 + 1}")
-        val pow = BigInt(m).pow(i % 10).toLong
-        s"substr('$chars', cast(pmod($hc div $pow, $m) + 1 as int), 1)"
-      }
-      s"""substr(concat(${charExprs.mkString(", ")}), 1,
-         |  cast($minLen + pmod(${h(s"${tag}len")}, $spread) as int))""".stripMargin
-    }
     val continentList = Continents.map(c => s"'$c'").mkString(", ")
     spark.range(0, n, 1, numPartitions)
       .withColumnRenamed("id", "row_id")
       .select(
         col("row_id"),
         expr(s"cast(pmod(${h("id")}, 2147483648) as int)").as("id"),
-        expr(fastString("nm", NameChars, 10, 6)).as("name"),
-        expr(fastString("ad", AddressChars, 15, 6)).as("address"),
+        HashChars(col("row_id"), seed, "nm", NameChars, 10, 6).as("name"),
+        HashChars(col("row_id"), seed, "ad", AddressChars, 15, 6).as("address"),
         expr(s"element_at(array($continentList), cast(pmod(${h("ct")}, 6) as int) + 1)")
           .as("continent"))
   }

@@ -30,11 +30,7 @@ import org.apache.spark.sql.SparkSession
   */
 final class StageMetrics private (spark: SparkSession) {
 
-  final case class StageRow(stageId: Int, name: String, numTasks: Int,
-                            wallMs: Long, runMs: Long, cpuMs: Long,
-                            shuffleReadB: Long, shuffleWriteB: Long,
-                            spillMemB: Long, spillDiskB: Long,
-                            peakExecMemB: Long)
+  import StageMetrics.StageRow
 
   private val rows = new ConcurrentLinkedQueue[StageRow]()
 
@@ -90,5 +86,12 @@ final class StageMetrics private (spark: SparkSession) {
 }
 
 object StageMetrics {
+  /** One completed stage's wall time and task metrics. */
+  final case class StageRow(stageId: Int, name: String, numTasks: Int,
+                            wallMs: Long, runMs: Long, cpuMs: Long,
+                            shuffleReadB: Long, shuffleWriteB: Long,
+                            spillMemB: Long, spillDiskB: Long,
+                            peakExecMemB: Long)
+
   def attach(spark: SparkSession): StageMetrics = new StageMetrics(spark)
 }

@@ -139,6 +139,30 @@ class SimilaritySpec extends SparkSpec {
     assert(got.sameElements(expectTop))
   }
 
+  test("planeSigns are pinned: the LSH and projection planes keep their signs") {
+    // Bit i of a plane's mask is set where component i is -1. The values
+    // were taken from MurmurHash3.productHash, which caseClassHash replaced.
+    def mask(p: Int): Long = Similarity.planeSigns(p, 64).zipWithIndex
+      .foldLeft(0L) { case (m, (s, i)) => if (s < 0) m | (1L << i) else m }
+    val pinned = Seq(
+      0 -> 0xb89fc792f9c655f0L, 1 -> 0xc0473387528008abL, 2 -> 0x3cd2a686509b6756L,
+      3 -> 0x2a73264c28d5ff7cL, 4 -> 0xe5e6e07ba7d5d367L, 5 -> 0x4a0f96e5ff95751bL,
+      6 -> 0xa1f68f4815eed487L, 7 -> 0x4100970c85534155L, 8 -> 0x22028853e6139dbdL,
+      9 -> 0xaa0eddbaebb12a26L, 10 -> 0x6342e389ec401915L, 11 -> 0x57b7c70c8c159785L,
+      12 -> 0xaf53007d6d8a5d3aL, 13 -> 0x175882fdba97b26aL, 14 -> 0xb392c4f2f082f9edL,
+      15 -> 0x44b95c55c3c4ce7cL,
+      1000 -> 0x88451d0d472e9bfaL, 1001 -> 0xb97033fc1679a759L, 1002 -> 0xa7de7f67065f46ffL,
+      1003 -> 0x273523cbcb69a0fcL, 1004 -> 0x9de52c7ff337792eL, 1005 -> 0xbabe17102eb4624fL,
+      1006 -> 0x779b76b72b48c248L, 1007 -> 0x04703169ed19784fL)
+    pinned.foreach { case (p, m) => assert(mask(p) === m, s"plane $p") }
+    // wider domain: 64 LSH and 64 projection planes at dim 512
+    val crc = new java.util.zip.CRC32
+    for (p <- (0 until 64) ++ (Similarity.ProjectionPlaneOffset until Similarity.ProjectionPlaneOffset + 64);
+         s <- Similarity.planeSigns(p, 512))
+      crc.update(if (s < 0) 1 else 0)
+    assert(crc.getValue === 3276037206L)
+  }
+
   test("LSH recall: banded hyperplane candidates recover most true top-1 neighbors") {
     val bf = Similarity.bruteForceTopK(emb, queries, 1)
       .select("q_id", "c_id").as[(Long, Long)].collect().toMap
@@ -474,7 +498,7 @@ class SimilaritySpec extends SparkSpec {
         graft.functions.VectorFunctions.asDouble(col("embedding")),
         graft.functions.VectorFunctions.asDouble(col("embedding"))).as("v2"))
     val ratio = projSq.join(origSq, "vec_id")
-      .agg(avg(col("p2") / col("v2"))).head.getDouble(0)
+      .agg(avg(col("p2") / col("v2"))).head().getDouble(0)
     assert(ratio > 0.5 && ratio < 2.0, s"mean norm ratio $ratio out of band")
     intercept[IllegalArgumentException] {
       Similarity.randomProjection(emb, outDim = 100)

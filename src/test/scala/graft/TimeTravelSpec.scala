@@ -363,10 +363,10 @@ class TimeTravelSpec extends SparkSpec {
     // drained, no probe job may start later either
     val tracker = spark.sparkContext.statusTracker
     eventually(timeout(10.seconds), interval(100.millis)) {
-      assert(tracker.getActiveJobIds.isEmpty)
+      assert(tracker.getActiveJobIds().isEmpty)
     }
     Thread.sleep(1000)
-    assert(tracker.getActiveJobIds.isEmpty, "an orphaned probe job started")
+    assert(tracker.getActiveJobIds().isEmpty, "an orphaned probe job started")
     assert(!new java.io.File(root).list().exists(_.startsWith("base-")))
     assert(TimeTravel.latestVersion(root) === -1L)
   }
