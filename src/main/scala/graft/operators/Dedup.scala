@@ -398,16 +398,7 @@ object Dedup {
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 30,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    var cutSeq = 0
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val path = s"$dir/cc_cut_$cutSeq"
-        cutSeq += 1
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      }
-      case None => _.localCheckpoint()
-    }
+    val cut = Lineage.cut(checkpointDir, "cc_cut")
     // Checkpoint the symmetrized edge list FIRST: `nodes` and `edges`
     // both consume it, and without this cut each of their checkpoints
     // would re-evaluate the upstream pair operator (the LSH join — the

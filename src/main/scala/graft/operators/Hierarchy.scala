@@ -49,16 +49,7 @@ object Hierarchy {
     require(rounds >= 0 && rounds <= 40,
       s"rounds must be in [0, 40] (depth <= 2^rounds), got $rounds")
     require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    var cutSeq = 0
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val path = s"$dir/hier_cut_$cutSeq"
-        cutSeq += 1
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      }
-      case None => _.localCheckpoint()
-    }
+    val cut = Lineage.cut(checkpointDir, "hier_cut")
     var state = nodes.select(
       col(idCol).as("id"),
       when(col(parentCol).isNull, col(idCol)).otherwise(col(parentCol))

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 import graft.functions.CsvCodec
 import graft.operators.Sorting
@@ -57,22 +58,21 @@ object ParityQueries {
   private[queries] def withStateStoreProvider[T](s: SparkSession, cls: String)(body: => T): T =
     withConf(s, "spark.sql.streaming.stateStore.providerClass", cls)(body)
 
-  /** Per-JVM cache of staged stream-INPUT directories, keyed by a
-    * content descriptor (fixture dir + slice recipe). Staged files are
+  /** Per-JVM cache of staged input directories, keyed by a content
+    * descriptor (fixture dir + staging recipe). Staged files are
     * immutable once written, so every later graded query — and every
     * Bench warmup/repeat pass — reuses the first staging instead of
-    * re-writing 3–6 parquet slices per run (pure temp-I/O overhead,
-    * ~3–5 s per suite pass). Checkpoints, query names, and memory
-    * sinks stay per-run and unique; only input data is shared.
-    * `computeIfAbsent` makes the first build exclusive per key. */
+    * re-writing it per run. Checkpoints, query names, and memory sinks
+    * stay per-run and unique; only input data is shared.
+    * `computeIfAbsent` makes the first build exclusive per key: `build`
+    * writes into a fresh scratch dir and returns what every caller of
+    * the key gets back (the dir itself, or a [[Staged]]). The stream
+    * inputs stage through [[replay]], whose key is its own [[Replay]]
+    * argument, so each of their keys has exactly one writer. */
   private[queries] object StagedInputs {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def apply(key: String)(build: String => Unit): String =
-      cache.computeIfAbsent(key, _ => {
-        val d = ScratchDirs("graft-stage")
-        build(d)
-        d
-      })
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    def apply[T <: AnyRef](key: String)(build: String => T): T =
+      cache.computeIfAbsent(key, _ => build(ScratchDirs("graft-stage"))).asInstanceOf[T]
   }
 
   /** Per-run scratch dirs (checkpoints, staged mutable inputs) with a
@@ -157,12 +157,10 @@ object ParityQueries {
     * ScratchDirs-tracked scratch dir (no /tmp accumulation), copy the
     * single part-file into `hand` as `slice-k.parquet` with a strictly
     * increasing mtime (how maxFilesPerTrigger=1 replays slices as
-    * ordered micro-batches). The ONE slice-staging implementation
-    * behind every tertile-staged stream query — protocol fixes land
-    * here once. */
-  private[queries] def writeSlice(df: DataFrame, hand: String, k: Int,
-      baseMtime: Long, prefix: String): Unit = {
-    val tmp = ScratchDirs(s"$prefix-$k")
+    * ordered micro-batches). */
+  private def writeSlice(df: DataFrame, hand: String, k: Int,
+      baseMtime: Long): Unit = {
+    val tmp = ScratchDirs(s"graft-slice-$k")
     df.repartition(1).write.mode("overwrite").parquet(tmp)
     val dst = new java.io.File(hand, s"slice-$k.parquet")
     java.nio.file.Files.copy(new java.io.File(tmp).listFiles()
@@ -180,53 +178,126 @@ object ParityQueries {
     if (d.isDirectory) d.list().toSet else Set.empty
   }
 
-  /** The clean time-tertile staging of the events fixture (three
-    * monotone micro-batch slices with increasing mtimes), shared by
-    * stream_upsert_sink, stream_gap_detect, and stream_custom_sessions
-    * — ONE writer behind the ONE StagedInputs cache key, so the staged
-    * content cannot drift between the queries that read it (the cache
-    * is first-writer-wins per JVM). */
-  private[queries] def stagedEventTertiles(s: SparkSession, dir: String): String = {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts_ms"), col("user_id"),
-        col("event_type"), col("value"))
-      .withColumn("day", expr("ts_ms div 86400000"))
-    val bounds = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    val batched = ev.crossJoin(broadcast(bounds))
+  /** Adds `batch`, the day tertile (1–3) of each row's `ts_ms` within
+    * the day span of `span`'s `ts_ms`: days split into three equal
+    * bands, so batch k holds whole days and precedes batch k+1. Taking
+    * the span from the whole table gives one event type's rows the
+    * same bands as the other's. */
+  private[queries] def dayTertile(rows: DataFrame, span: DataFrame): DataFrame = {
+    val day = expr("ts_ms div 86400000")
+    val bounds = span.agg(min(day).as("mn"), max(day).as("mx"))
+    rows.withColumn("day", day).crossJoin(broadcast(bounds))
       .withColumn("batch", expr("((day - mn) * 3) div (mx - mn + 1) + 1"))
-    StagedInputs(s"$dir|events|tertiles-full") { d =>
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { k =>
-        writeSlice(batched.filter(col("batch") === k)
-            .select("event_id", "ts_ms", "user_id", "event_type", "value"),
-          d, k, base, "graft-tert")
-      }
+      .drop("day", "mn", "mx")
+  }
+
+  /** A fixture input of the graded streams, staged as files that a
+    * file stream replays: which rows, laid out in which files. Its
+    * `toString` is the staging's cache key after the fixture dir, so
+    * equal inputs share one staging, and an input's rows and files are
+    * a function of the key alone. */
+  private[queries] sealed trait Replay {
+    /** The rows to stage; slice inputs carry a `batch` column (1–3)
+      * naming the slice of each row. Built only by the first staging
+      * per JVM, so its fixture reads run once. */
+    def frame(s: SparkSession, dir: String): DataFrame
+    /** The streaming view of the staged rows. */
+    def view(stream: DataFrame): DataFrame = stream
+  }
+
+  /** The raw events rows (one event type when `eventType` is set),
+    * split round-robin into `roundRobin` files, or written as read
+    * when it is None. The view adds `ts_ms` ([[Tables.withTsMs]]). */
+  private[queries] final case class EventFiles(roundRobin: Option[Int],
+      eventType: Option[String] = None) extends Replay {
+    def frame(s: SparkSession, dir: String): DataFrame = {
+      val ev = s.read.parquet(s"$dir/events.parquet")
+      val rows = eventType.fold(ev)(t => ev.filter(col("event_type") === t))
+      roundRobin.fold(rows)(rows.repartition)
+    }
+    override def view(stream: DataFrame): DataFrame = Tables.withTsMs(stream)
+  }
+
+  /** Events projected to `cols` as three ordered slices, slice k =
+    * [[dayTertile]] k over the whole table's day span. `eventType`
+    * keeps one event type; `plantLate` moves the tertile-1 rows with
+    * event_id % 17 = 0 into slice 3, where they arrive late. */
+  private[queries] final case class EventSlices(cols: Seq[String],
+      eventType: Option[String] = None, plantLate: Boolean = false) extends Replay {
+    def frame(s: SparkSession, dir: String): DataFrame = {
+      val ev = Tables.events(s, dir)
+      val tert = dayTertile(
+        eventType.fold(ev)(t => ev.filter(col("event_type") === t)), ev)
+      val batched = if (!plantLate) tert else tert.withColumn("batch",
+        when(col("batch") === 1 && col("event_id") % 17 === 0, 3)
+          .otherwise(col("batch")))
+      batched.select((cols :+ "batch").map(col): _*)
     }
   }
 
-  /** Time-tertile staging of ONE event_type side (event_id, ts_ms,
-    * user_id; three monotone slices sharing the GLOBAL day bounds so
-    * batch k of either side covers the same time band) — the shared
-    * writer behind stream_outer_join and stream_join_then_window
-    * (one StagedInputs key per (dir, type): first-writer-wins, no
-    * drift between the queries that read it). */
-  private[queries] def stagedSideTertiles(s: SparkSession, dir: String,
-      eventType: String): String =
-    StagedInputs(s"$dir|events|$eventType|tertiles") { hand =>
-      val allDays = Tables.events(s, dir)
-        .select(expr("ts_ms div 86400000").as("day"))
-      val bounds = allDays.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-      val base = System.currentTimeMillis()
-      val side = Tables.events(s, dir).filter(col("event_type") === eventType)
-        .select(col("event_id"), col("ts_ms"), col("user_id"))
-        .withColumn("day", expr("ts_ms div 86400000"))
-        .crossJoin(broadcast(bounds))
-        .withColumn("batch", expr("((day - mn) * 3) div (mx - mn + 1) + 1"))
-      (1 to 3).foreach { k =>
-        writeSlice(side.filter(col("batch") === k)
-            .select("event_id", "ts_ms", "user_id"),
-          hand, k, base, s"graft-side-$eventType")
+  /** The clean day-tertile slices of the whole events rows, shared by
+    * every stream that replays the events in time order. */
+  private[queries] val EventTertiles: Replay =
+    EventSlices(Seq("event_id", "ts_ms", "user_id", "event_type", "value"))
+
+  /** The documents (doc_id, text) as three ordered doc-id tertile
+    * slices, each row given a synthetic event time
+    * ts_ms = (doc_id + 1) minutes. */
+  private[queries] case object DocSlices extends Replay {
+    def frame(s: SparkSession, dir: String): DataFrame = {
+      val docs = Tables.documents(s, dir).select("doc_id", "text")
+      val n = docs.count()
+      docs.withColumn("ts_ms", (col("doc_id") + 1) * 60000L)
+        .withColumn("batch", expr(s"(doc_id * 3) div $n + 1"))
+    }
+  }
+
+  /** A staged [[Replay]]: its directory and the schema its files were
+    * written with. */
+  private[queries] final case class Staged(input: Replay, dir: String,
+      schema: StructType) {
+    /** A bounded micro-batch stream over the staged files (or over
+      * `path`, a directory the caller [[land]]s them in): one file per
+      * trigger, or every file in one batch. The schema is declared, so
+      * building it runs no Spark job. */
+    def stream(s: SparkSession, oneFilePerTrigger: Boolean = true,
+        path: String = dir): DataFrame = {
+      val r = s.readStream.schema(schema)
+      input.view((if (oneFilePerTrigger) r.option("maxFilesPerTrigger", "1")
+        else r).parquet(path))
+    }
+    /** Copy slice `k`, mtime included, into `into`: how a restart query
+      * has new input land between two runs. */
+    def land(k: Int, into: String): Unit = {
+      val f = s"slice-$k.parquet"
+      java.nio.file.Files.copy(java.nio.file.Paths.get(dir, f),
+        java.nio.file.Paths.get(into, f),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      ()
+    }
+  }
+
+  /** Stage `input` over fixture `dir` once per JVM through
+    * [[StagedInputs]], under the key `dir|input`. Slice inputs become
+    * `slice-k.parquet` files with increasing mtimes, so a one-file-per-
+    * trigger stream replays them in order; the others are written as
+    * their frame's partitions. The kept schema is the frame's, made
+    * nullable as Spark writes it. */
+  private[queries] def replay(s: SparkSession, dir: String, input: Replay): Staged =
+    StagedInputs(s"$dir|$input") { d =>
+      val df = input.frame(s, dir)
+      val rows = input match {
+        case _: EventFiles =>
+          df.write.mode("overwrite").parquet(d)
+          df
+        case _ =>
+          val base = System.currentTimeMillis()
+          (1 to 3).foreach { k =>
+            writeSlice(df.filter(col("batch") === k).drop("batch"), d, k, base)
+          }
+          df.drop("batch")
       }
+      Staged(input, d, Bridge.asNullable(rows.schema))
     }
 
   private def eventsProjected(s: SparkSession, dir: String): DataFrame =
@@ -369,13 +440,7 @@ object ParityQueries {
     // immediately and the AvailableNow last-window pitfall does not
     // apply.
     "stream_dedup" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|rep4") { d =>
-        s.read.parquet(s"$dir/events.parquet").repartition(4)
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand))
+      val stream = replay(s, dir, EventFiles(Some(4))).stream(s)
       // watermark wider than the fixture's whole time span: batches
       // arrive in arbitrary ts order, and a narrow watermark would
       // DROP a late-batch-only user as late data (correct streaming
@@ -387,14 +452,9 @@ object ParityQueries {
 
     "stream_windowed_counts" -> ((s, dir) => withShufflePartitions(s, 4) {
       // FileStreamSource needs a DIRECTORY; the fixture is one parquet
-      // file — stage it into a fresh temp dir (the same file handoff
-      // the sorted-copy pipeline uses)
-      val hand = StagedInputs(s"$dir|events|plain") { d =>
-        s.read.parquet(s"$dir/events.parquet")
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
+      // file — staged into one, replayed as a single batch
+      val stream = replay(s, dir, EventFiles(None))
+        .stream(s, oneFilePerTrigger = false)
       val agg = graft.streaming.Streaming.windowedCounts(stream)
       drain(agg, "complete")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
@@ -419,13 +479,7 @@ object ParityQueries {
     "stream_rocksdb_state" -> ((s, dir) => withShufflePartitions(s, 4) {
       withStateStoreProvider(s, "org.apache.spark.sql.execution." +
           "streaming.state.RocksDBStateStoreProvider") {
-        val hand = StagedInputs(s"$dir|events|rep3") { d =>
-          s.read.parquet(s"$dir/events.parquet").repartition(3)
-            .write.mode("overwrite").parquet(d)
-        }
-        val schema = s.read.parquet(hand).schema
-        val stream = Tables.withTsMs(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand))
+        val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
         val agg = graft.streaming.Streaming.windowedCounts(stream)
         drain(agg, "complete")
           .select(unix_millis(col("window_start")).as("window_start_ms"),
@@ -446,13 +500,7 @@ object ParityQueries {
     // hard: the state contents must equal the batch GROUP BY oracle
     // exactly (complete-mode agg state IS the final aggregate).
     "stream_state_inspect" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|rep3") { d =>
-        s.read.parquet(s"$dir/events.parquet").repartition(3)
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand))
+      val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
       val agg = graft.streaming.Streaming.windowedCounts(stream)
       // the graded result is the checkpointed STATE, not the sink
       val ckpt = ScratchDirs("graft-sssi-ckpt")
@@ -479,13 +527,7 @@ object ParityQueries {
           "changelogCheckpointing.enabled", "true") {
         withStateStoreProvider(s, "org.apache.spark.sql.execution." +
             "streaming.state.RocksDBStateStoreProvider") {
-          val hand = StagedInputs(s"$dir|events|rep3") { d =>
-            s.read.parquet(s"$dir/events.parquet").repartition(3)
-              .write.mode("overwrite").parquet(d)
-          }
-          val schema = s.read.parquet(hand).schema
-          val stream = Tables.withTsMs(s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(hand))
+          val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
           val agg = graft.streaming.Streaming.windowedCounts(stream)
           val ckpt = ScratchDirs("graft-sscl-ckpt")
           drain(agg, "complete", ckpt)
@@ -518,13 +560,7 @@ object ParityQueries {
     "stream_transform_with_state" -> ((s, dir) => withShufflePartitions(s, 4) {
       withStateStoreProvider(s, "org.apache.spark.sql.execution." +
           "streaming.state.RocksDBStateStoreProvider") {
-        val hand = StagedInputs(s"$dir|events|rep3") { d =>
-          s.read.parquet(s"$dir/events.parquet").repartition(3)
-            .write.mode("overwrite").parquet(d)
-        }
-        val schema = s.read.parquet(hand).schema
-        val stream = Tables.withTsMs(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand))
+        val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
         val snapshots = graft.streaming.Streaming.userAccumStream(stream)
         drain(snapshots.toDF(), "append")
           .groupBy(col("user_id"))
@@ -553,31 +589,18 @@ object ParityQueries {
     // live, so no session is lost to the append-mode watermark-close
     // rule on a bounded run.
     "stream_session_window" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|plain") { d =>
-        s.read.parquet(s"$dir/events.parquet")
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
+      val stream = replay(s, dir, EventFiles(None))
+        .stream(s, oneFilePerTrigger = false)
       val agg = graft.streaming.Streaming.sessionWindowAgg(stream, "30 minutes")
       drain(agg, "complete").select("user_id", "sess_start_ms", "sess_end_ms", "n_events")
         .orderBy("user_id", "sess_start_ms")
     }),
 
     "stream_interval_join" -> ((s, dir) => withShufflePartitions(s, 4) {
-      def stage(t: String): String = StagedInputs(s"$dir|events|$t|rep3") { d =>
-        s.read.parquet(s"$dir/events.parquet")
-          .filter(col("event_type") === t).repartition(3)
-          .write.mode("overwrite").parquet(d)
-      }
-      val lDir = stage("click")
-      val rDir = stage("purchase")
-      val schema = s.read.parquet(lDir).schema
-      def rd(d: String) = Tables.withTsMs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d))
-      val left = rd(lDir).select(col("event_id").as("l_event"),
+      def rd(t: String) = replay(s, dir, EventFiles(Some(3), Some(t))).stream(s)
+      val left = rd("click").select(col("event_id").as("l_event"),
         col("user_id"), col("ts_ms").as("l_ts"))
-      val right = rd(rDir).select(col("event_id").as("r_event"),
+      val right = rd("purchase").select(col("event_id").as("r_event"),
         col("user_id"), col("ts_ms").as("r_ts"))
       val joined = graft.streaming.Streaming.streamStreamIntervalJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
@@ -594,13 +617,7 @@ object ParityQueries {
     // accumulated memory-sink table must equal the batch join, which is
     // what the oracle states.
     "stream_enrich" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|rep3") { d =>
-        s.read.parquet(s"$dir/events.parquet").repartition(3)
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand))
+      val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey").as("user_id"), col("c_name"), col("c_mktsegment"))
@@ -622,14 +639,11 @@ object ParityQueries {
     // drives null emission. The oracle = all predicate matches UNION
     // unmatched clicks with l_ts + 6 h < min(side maxima) − 1 h.
     "stream_outer_join" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val lDir = stagedSideTertiles(s, dir, "click")
-      val rDir = stagedSideTertiles(s, dir, "purchase")
-      val schema = s.read.parquet(lDir).schema
-      def rd(d: String) = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d)
-      val left = rd(lDir).select(col("event_id").as("l_event"),
+      def rd(t: String) = replay(s, dir,
+        EventSlices(Seq("event_id", "ts_ms", "user_id"), Some(t))).stream(s)
+      val left = rd("click").select(col("event_id").as("l_event"),
         col("user_id"), col("ts_ms").as("l_ts"))
-      val right = rd(rDir).select(col("event_id").as("r_event"),
+      val right = rd("purchase").select(col("event_id").as("r_event"),
         col("user_id"), col("ts_ms").as("r_ts"))
       val joined = graft.streaming.Streaming.streamStreamLeftOuterJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
@@ -649,12 +663,9 @@ object ParityQueries {
     // event-time order and the final state must equal the batch
     // latest-row-per-user oracle.
     "stream_upsert_sink" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = stagedEventTertiles(s, dir)
+      val stream = replay(s, dir, EventTertiles).stream(s)
       val stateRoot = ScratchDirs("graft-sus-state")
       @volatile var statePath: Option[String] = None
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
       val ckpt = ScratchDirs("graft-sus-ckpt")
       val q = stream.writeStream
         .trigger(Trigger.AvailableNow())
@@ -703,18 +714,16 @@ object ParityQueries {
     // same LWW a 100 TB CDC-ingest trickle relies on).
     "stream_versioned_sink" -> ((s, dir) => withShufflePartitions(s, 4) {
       import graft.operators.TimeTravel
-      val hand = stagedEventTertiles(s, dir)
+      val in = replay(s, dir, EventTertiles)
       val root = ScratchDirs("graft-svs")
-      val schema = s.read.parquet(hand).schema
       // v0: an EMPTY base — the table exists before the first batch,
       // so every micro-batch goes through the same idempotent path
       TimeTravel.init(
-        s.read.schema(schema).parquet(hand).limit(0)
+        s.read.schema(in.schema).parquet(in.dir).limit(0)
           .select(col("user_id"), col("ts_ms"), col("event_type"),
             col("value")),
         root, "user_id")
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
+      val stream = in.stream(s)
       val ckpt = ScratchDirs("graft-svs-ckpt")
       val q = stream.writeStream
         .trigger(Trigger.AvailableNow())
@@ -752,12 +761,8 @@ object ParityQueries {
     // oracle replays the fan-out by expanding each event to its two
     // epoch-aligned window starts.
     "stream_sliding_window" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|plain") { d =>
-        s.read.parquet(s"$dir/events.parquet")
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = Tables.withTsMs(s.readStream.schema(schema).parquet(hand))
+      val stream = replay(s, dir, EventFiles(None))
+        .stream(s, oneFilePerTrigger = false)
       val agg = graft.streaming.Streaming.slidingCounts(stream)
       drain(agg, "complete")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
@@ -774,13 +779,7 @@ object ParityQueries {
     // replay. Aggregation state is |types|·256 rows — bounded by the
     // sketch, not the stream (THE reason sketches exist at 100 TB).
     "stream_hll" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = StagedInputs(s"$dir|events|rep3") { d =>
-        s.read.parquet(s"$dir/events.parquet").repartition(3)
-          .write.mode("overwrite").parquet(d)
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
+      val stream = replay(s, dir, EventFiles(Some(3))).stream(s)
       val regs = graft.operators.Sketches.hllRegisters(
         stream.select(col("event_type"), col("user_id")),
         "event_type", col("user_id"))
@@ -808,26 +807,8 @@ object ParityQueries {
     // rule, its one-batch slack, and the append-mode close rule are all
     // hash-graded.
     "stream_late_drop" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts_ms"), col("event_type"), col("value"))
-        .withColumn("day", expr("ts_ms div 86400000"))
-      val bounds = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-      val batched = ev.crossJoin(broadcast(bounds))
-        .withColumn("tb", expr("((day - mn) * 3) div (mx - mn + 1) + 1"))
-        .withColumn("batch",
-          when(col("tb") === 1 && col("event_id") % 17 === 0, 3)
-            .otherwise(col("tb")))
-      val hand = StagedInputs(s"$dir|events|tertiles-lateplant") { d =>
-        val base = System.currentTimeMillis()
-        (1 to 3).foreach { k =>
-          writeSlice(batched.filter(col("batch") === k)
-              .select("event_id", "ts_ms", "event_type", "value"),
-            d, k, base, "graft-sld")
-        }
-      }
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
+      val stream = replay(s, dir, EventSlices(
+        Seq("event_id", "ts_ms", "event_type", "value"), plantLate = true)).stream(s)
       val agg = graft.streaming.Streaming.windowedCounts(stream)
       drain(agg, "append")
         .select(unix_millis(col("window_start")).as("window_start_ms"),
@@ -849,10 +830,7 @@ object ParityQueries {
     // micro-batches. Emission is arrival-order-deterministic because
     // the slices are globally time-ordered by construction.
     "stream_gap_detect" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = stagedEventTertiles(s, dir)
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
+      val stream = replay(s, dir, EventTertiles).stream(s)
       import s.implicits._
       val ticks = stream.select(col("event_type").as("key"), col("ts_ms"))
         .as[graft.streaming.Streaming.Tick]
@@ -875,10 +853,7 @@ object ParityQueries {
     // gap comparison (merge at exactly 30 min, split beyond — the
     // built-in splits AT the boundary).
     "stream_custom_sessions" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val hand = stagedEventTertiles(s, dir)
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
+      val stream = replay(s, dir, EventTertiles).stream(s)
       import s.implicits._
       val evts = stream.select(col("user_id"), col("event_id"), col("ts_ms"))
         .as[graft.streaming.Streaming.Evt]
@@ -907,10 +882,7 @@ object ParityQueries {
     "stream_state_timers" -> ((s, dir) => withShufflePartitions(s, 4) {
       withStateStoreProvider(s, "org.apache.spark.sql.execution." +
           "streaming.state.RocksDBStateStoreProvider") {
-        val hand = stagedEventTertiles(s, dir)
-        val schema = s.read.parquet(hand).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand)
+        val stream = replay(s, dir, EventTertiles).stream(s)
         val closes = graft.streaming.Streaming
           .dayCloseStream(stream, gapMs = 3600007L)
         drain(closes.toDF(), "append").orderBy("user_id", "day")
@@ -931,32 +903,20 @@ object ParityQueries {
     // recovery defect is observable either way: reprocessing old files
     // double-counts (hash flip), lost state drops the run-1 windows
     // (hash flip), ignoring the checkpoint rewrites batch 0 (require
-    // fails). Input staging is per-run scratch (the input MUTATES
-    // mid-query, so the immutable StagedInputs cache cannot hold it).
+    // fails). The input MUTATES mid-query, so the run reads a per-run
+    // directory the staged slices land in one at a time.
     "stream_restart_recovery" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts_ms"), col("user_id"),
-          col("event_type"), col("value"))
-        .withColumn("day", expr("ts_ms div 86400000"))
-      val bounds = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-      val batched = ev.crossJoin(broadcast(bounds))
-        .withColumn("batch", expr("((day - mn) * 3) div (mx - mn + 1) + 1"))
+      val in = replay(s, dir, EventTertiles)
       val hand = ScratchDirs("graft-srr-in")
       val ckpt = ScratchDirs("graft-srr-ckpt")
-      val base = System.currentTimeMillis()
-      def stage(k: Int): Unit = writeSlice(
-        batched.filter(col("batch") === k)
-          .select("event_id", "ts_ms", "user_id", "event_type", "value"),
-        hand, k, base, "graft-srr")
-      stage(1); stage(2)
-      val schema = s.read.parquet(hand).schema
+      in.land(1, hand); in.land(2, hand)
       def run(): DataFrame = drain(
         graft.streaming.Streaming.windowedCounts(
-          s.readStream.schema(schema).parquet(hand)),
+          in.stream(s, oneFilePerTrigger = false, hand)),
         "complete", ckpt)
       val first = run()
       val commits1 = ckptCommits(ckpt)
-      stage(3)
+      in.land(3, hand)
       val fin = run()
       val commits2 = ckptCommits(ckpt)
       // the restart proves nothing unless run 1 was genuinely partial
@@ -993,21 +953,11 @@ object ParityQueries {
     "stream_restart_tws" -> ((s, dir) => withShufflePartitions(s, 4) {
       withStateStoreProvider(s, "org.apache.spark.sql.execution." +
           "streaming.state.RocksDBStateStoreProvider") {
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("ts_ms"), col("user_id"), col("value"))
-          .withColumn("day", expr("ts_ms div 86400000"))
-        val bounds = ev.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-        val batched = ev.crossJoin(broadcast(bounds))
-          .withColumn("batch", expr("((day - mn) * 3) div (mx - mn + 1) + 1"))
+        val in = replay(s, dir,
+          EventSlices(Seq("event_id", "ts_ms", "user_id", "value")))
         val hand = ScratchDirs("graft-srt-in")
         val ckpt = ScratchDirs("graft-srt-ckpt")
-        val base = System.currentTimeMillis()
-        def stage(k: Int): Unit = writeSlice(
-          batched.filter(col("batch") === k)
-            .select("event_id", "ts_ms", "user_id", "value"),
-          hand, k, base, "graft-srt")
-        stage(1); stage(2)
-        val schema = s.read.parquet(hand).schema
+        in.land(1, hand); in.land(2, hand)
         // the append-mode MEMORY sink refuses checkpoint recovery (only
         // complete mode regenerates its table) — the recoverable sink
         // here is the parquet FILE sink, whose _spark_metadata log is
@@ -1015,7 +965,7 @@ object ParityQueries {
         // ONE exactly-once table afterwards
         val outDir = ScratchDirs("graft-srt-out")
         def run(): Unit = {
-          val stream = s.readStream.schema(schema).parquet(hand)
+          val stream = in.stream(s, oneFilePerTrigger = false, hand)
           val snaps = graft.streaming.Streaming.userAccumStream(stream)
           val q = snaps.toDF().writeStream
             .trigger(Trigger.AvailableNow())
@@ -1027,7 +977,7 @@ object ParityQueries {
         }
         run()
         val commits1 = ckptCommits(ckpt)
-        stage(3)
+        in.land(3, hand)
         run()
         val commits2 = ckptCommits(ckpt)
         require(commits1.nonEmpty && commits1.subsetOf(commits2) &&
@@ -1066,14 +1016,11 @@ object ParityQueries {
     // event, and all matching purchases arrived by then (time-ordered
     // slices) and processed before the batch-end eviction.
     "stream_join_then_window" -> ((s, dir) => withShufflePartitions(s, 4) {
-      val lDir = stagedSideTertiles(s, dir, "click")
-      val rDir = stagedSideTertiles(s, dir, "purchase")
-      val schema = s.read.parquet(lDir).schema
-      def rd(d: String) = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d)
-      val left = rd(lDir).select(col("event_id").as("l_event"),
+      def rd(t: String) = replay(s, dir,
+        EventSlices(Seq("event_id", "ts_ms", "user_id"), Some(t))).stream(s)
+      val left = rd("click").select(col("event_id").as("l_event"),
         col("user_id"), col("ts_ms").as("l_ts"))
-      val right = rd(rDir).select(col("event_id").as("r_event"),
+      val right = rd("purchase").select(col("event_id").as("r_event"),
         col("user_id"), col("ts_ms").as("r_ts"))
       val joined = graft.streaming.Streaming.streamStreamIntervalJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
@@ -1146,25 +1093,22 @@ object ParityQueries {
       }
       require(canRetry,
         s"stream_task_retry needs a task-retry budget (local[N,2+]); master=$m")
-      val hand = stagedEventTertiles(s, dir)
+      val in = replay(s, dir, EventTertiles)
       // the fault marker = windows of the THIRD staged slice, which
       // first exist in micro-batch 2's output. Derived from slice-3
       // ITSELF (min ts, floored to the window grain) — definitionally
       // synchronized with whatever the staging wrote, no second copy
       // of the tertile formula, no full-table scan; day-aligned
       // tertiles mean the floor-hour window holds only slice-3 rows
-      val slice3Min = s.read
-        .parquet(new java.io.File(hand, "slice-3.parquet").getPath)
+      val slice3Min = s.read.schema(in.schema)
+        .parquet(new java.io.File(in.dir, "slice-3.parquet").getPath)
         .agg(min(col("ts_ms"))).head()
       require(!slice3Min.isNullAt(0), "staged slice 3 is empty")
       val lo3Ms = (slice3Min.getLong(0) / 3600000L) * 3600000L
       val tag = "graft_retry_" + java.util.UUID.randomUUID().toString.take(8)
       graft.streaming.FaultInjection.arm(tag)
       val retried = s.sparkContext.longAccumulator(s"retried_$tag")
-      val schema = s.read.parquet(hand).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(hand)
-      val agg = graft.streaming.Streaming.windowedCounts(stream)
+      val agg = graft.streaming.Streaming.windowedCounts(in.stream(s))
         .withColumn("n", graft.streaming.FaultInjection.faultOnce(tag, retried)(
           col("n"), unix_millis(col("window_start")) >= lit(lo3Ms)))
       val fin = drain(agg, "complete")

@@ -466,6 +466,7 @@ object TrainingDataQueries {
         .toSeq
       graft.sources.AvroIngest.writeCustomerAvro(rows,
         new java.io.File(d, "all.avro"), syncIntervalBytes = 512)
+      d
     }
 
   /** Open the staged single-file fixture through the AvroSplit DSv2
@@ -751,10 +752,7 @@ object TrainingDataQueries {
     // groupBys over the component labels + one anti-join for the
     // never-paired documents; output is bounded by the largest
     // component size, never the corpus.
-    "dedup_cluster_stats" -> ((s, dir) => graft.operators.Spread.suppress {
-      // suppress (r14): the component rounds above the pair generator
-      // dominate; the internal spread only adds its exchange (verdict
-      // item 3 names this composite alongside dedup_pair_eval).
+    "dedup_cluster_stats" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val comp = Dedup.connectedComponents(
         Dedup.minhashPairs(docs, "doc_id", "text"))
@@ -2963,6 +2961,7 @@ object TrainingDataQueries {
           graft.sources.AvroIngest.writeCustomerAvro(g,
             new java.io.File(d, f"part-$i%02d.avro"))
         }
+        d
       }
       graft.sources.AvroIngest.readCustomerAvro(s, path)
         .orderBy("c_custkey")
@@ -3028,6 +3027,7 @@ object TrainingDataQueries {
           .toSeq
         graft.sources.AvroIngest.writeEmbeddingAvro(rows,
           new java.io.File(d, "all.avro"), syncIntervalBytes = 2048)
+        d
       }
       val out = avroSplitRead(s, path)
       require(out.rdd.getNumPartitions > 1,
@@ -3059,6 +3059,7 @@ object TrainingDataQueries {
           col("rec").substr(1, 17)).otherwise(col("rec")).as("value"))
       val path = ParityQueries.StagedInputs(s"$dir|documents|fixed-width") { d =>
         lines.write.mode("overwrite").text(d)
+        d
       }
       s.read.text(path)
         .filter(length(col("value")) === 30)
@@ -3084,6 +3085,7 @@ object TrainingDataQueries {
       val path = ParityQueries.StagedInputs(s"$dir|documents|csv-quoted") { d =>
         enriched.write.mode("overwrite")
           .option("header", "true").option("quoteAll", "true").csv(d)
+        d
       }
       s.read.option("header", "true").option("multiLine", "true")
         .schema("doc_id LONG, lang STRING, text STRING")
@@ -3330,6 +3332,7 @@ object TrainingDataQueries {
       val out = ParityQueries.StagedInputs(s"$dir|documents|hive-by-source") { d =>
         Tables.documents(s, dir).write.mode("overwrite")
           .partitionBy("source").parquet(d)
+        d
       }
       val minSource = Tables.documents(s, dir)
         .agg(min(col("source"))).first().getString(0)
@@ -3609,29 +3612,7 @@ object TrainingDataQueries {
     // engines).
     "stream_neardup" -> ((s, dir) =>
       ParityQueries.withShufflePartitions(s, 4) {
-        // Doc-tertile staging rides the same single-writer
-        // computeIfAbsent cache as the event tertiles: the slice content
-        // is a pure function of the fixture dir, and the cache makes the
-        // first build exclusive per JVM — no exists()/mkdirs race, no
-        // partially-written directory visible to a concurrent grader.
-        val hand = ParityQueries.StagedInputs(s"$dir|documents|tertiles-ndp") { d =>
-          val docs = Tables.documents(s, dir).select("doc_id", "text")
-          val n = docs.count()
-          val base = System.currentTimeMillis()
-          (1 to 3).foreach { k =>
-            val tmp = ParityQueries.ScratchDirs(s"graft-sndp-$k")
-            docs.filter(expr(s"(doc_id * 3) div $n + 1") === k)
-              .withColumn("ts_ms", (col("doc_id") + 1) * 60000L)
-              .repartition(1).write.mode("overwrite").parquet(tmp)
-            val dst = new java.io.File(d, s"slice-$k.parquet")
-            java.nio.file.Files.copy(new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head.toPath, dst.toPath)
-            dst.setLastModified(base + k * 10000L)
-          }
-        }
-        val schema = s.read.parquet(hand).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand)
+        val stream = ParityQueries.replay(s, dir, ParityQueries.DocSlices).stream(s)
         val pairs = graft.streaming.Streaming.minhashNearDupStream(
           stream, "doc_id", "text", "ts_ms", watermark = "87600 hours")
         ParityQueries.drain(pairs.toDF(), "append")
@@ -3657,13 +3638,8 @@ object TrainingDataQueries {
     // same argument as stream_hll's register max.
     "stream_quantile_hist" -> ((s, dir) =>
       ParityQueries.withShufflePartitions(s, 4) {
-        val hand = ParityQueries.StagedInputs(s"$dir|events|rep3") { d =>
-          s.read.parquet(s"$dir/events.parquet").repartition(3)
-            .write.mode("overwrite").parquet(d)
-        }
-        val schema = s.read.parquet(hand).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(hand)
+        val stream = ParityQueries.replay(s, dir,
+          ParityQueries.EventFiles(Some(3))).stream(s)
         val hist = stream.select(col("event_type"),
             least(expr("greatest(cast(floor(value * 100) as bigint), 0) div 500"),
               lit(1023L)).as("bucket"))

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming jobs — the streaming-native form of the reference
   * pipeline plus the windowed/sessionized analytics the north star asks
@@ -106,102 +105,6 @@ object Streaming {
   def enrichStream(stream: DataFrame, dim: DataFrame,
                    joinCols: Seq[String]): DataFrame =
     stream.join(broadcast(dim), joinCols)
-
-  /** Streaming corpus maintenance — the streaming twin of the batch
-    * `pipeline_incremental` query, with `foreachBatch` as the MERGE
-    * driver: each micro-batch of documents is quality-gated, exact-
-    * deduplicated within the batch, near-dup-matched against the
-    * CURRENT accumulated corpus (the delta-probes-corpus band join of
-    * [[graft.operators.Dedup.incrementalMinhashMatches]] — per-batch
-    * cost scales with the batch, never the corpus), and only unmatched
-    * survivors are written.
-    *
-    * The corpus lives as parquet under `corpusDir/batch=N/` — each
-    * micro-batch OVERWRITES its own batch path, so a micro-batch
-    * retried after a partial write is idempotent (a plain append would
-    * be at-least-once), and the corpus read is a plain
-    * partition-discovery scan; batch ids are zero-padded so the
-    * directory listing keeps batch order. At 100 TB the
-    * corpus side of the match joins pre-indexed band keys instead of
-    * re-signing every document per batch — the signature index is the
-    * corpus-maintenance analog of a search index.
-    *
-    * Near-dups WITHIN one micro-batch are not collapsed (only exact
-    * dups are) — the batch-local pair operators + survivor selection
-    * handle that upstream if needed. */
-  def incrementalIngestStream(docs: DataFrame, corpusDir: String,
-                              checkpointDir: String,
-                              minAlpha: Double = 0.6): StreamingQuery = {
-    import graft.operators.{Dedup, TextAnalysis}
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val kept = Dedup.exactSurvivors(
-          TextAnalysis.quality(batch, "doc_id", "text",
-              passthrough = Seq("text", "lang", "source"))
-            .filter(col("alpha_ratio") >= minAlpha)
-            .select("doc_id", "text", "lang", "source"),
-          "doc_id", Seq("text"))
-        val corpus =
-          if (new java.io.File(corpusDir).isDirectory &&
-              new java.io.File(corpusDir).list().exists(_.startsWith("batch=")))
-            Some(spark.read.parquet(corpusDir)
-              .select("doc_id", "text", "lang", "source"))
-          else None
-        val survivors = corpus match {
-          case Some(c) =>
-            val matches = Dedup.incrementalMinhashMatches(kept, c,
-              "doc_id", "text", numHashes = 16, numBands = 4,
-              minEstimate = 0.5)
-            kept.join(matches.select(col("new_doc").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          case None => kept
-        }
-        survivors.write.mode("overwrite")
-          .parquet(f"$corpusDir/batch=$batchId%09d")
-      }
-      .start()
-  }
-
-  /** Streaming JSONL ingest with corrupt-record quarantine — the
-    * streaming twin of the graded `ingest_quarantine` query. New JSONL
-    * files landing in `inDir` are parsed PERMISSIVEly against the
-    * explicit schema; good rows land under `goodDir/batch=N/`, the RAW
-    * text of unparseable lines under `quarantineDir/batch=N/`. Nothing
-    * kills the stream, nothing is silently dropped, and overwriting
-    * the path derived from the batch id keeps a retried micro-batch
-    * idempotent (a plain append would re-append its rows). The batch
-    * is pinned with `persist` before the two writes: the quarantine
-    * write projects ONLY the corrupt column, and an unpinned plan
-    * would re-read the files under the corrupt-column-only pruning
-    * Spark disallows for raw JSON scans. */
-  def jsonlIngestStream(spark: SparkSession, inDir: String, schema: StructType,
-                        goodDir: String, quarantineDir: String,
-                        checkpointDir: String): StreamingQuery = {
-    val full = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
-    spark.readStream
-      .schema(full)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          batch.filter(col("_corrupt_record").isNull)
-            .drop("_corrupt_record")
-            .write.mode("overwrite").parquet(f"$goodDir/batch=$batchId%09d")
-          batch.filter(col("_corrupt_record").isNotNull)
-            .select(col("_corrupt_record").as("raw"))
-            .write.mode("overwrite").parquet(f"$quarantineDir/batch=$batchId%09d")
-        } finally batch.unpersist()
-      }
-      .start()
-  }
 
   /** Stream–stream INNER join on a key within an event-time interval:
     * right events in [left − lowerMs, left + upperMs]. Both sides are

@@ -4,9 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge to the `private[sql]` Column↔Expression converters —
-  * the supported way for libraries to attach custom Catalyst expressions
-  * to the public Column API in Spark 4's split API/classic layout. */
+/** Minimal bridge to `private[sql]`/`private[spark]` internals: the
+  * Column↔Expression converters — the supported way for libraries to
+  * attach custom Catalyst expressions to the public Column API in
+  * Spark 4's split API/classic layout — and `StructType.asNullable`. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -18,4 +19,9 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** `schema` with every field, nested ones included, nullable: the
+    * schema Spark writes a frame's files with. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

@@ -211,69 +211,6 @@ class StreamingSpec extends SparkSpec {
       s"unrelated doc must not pair: $got")
   }
 
-  test("incrementalIngestStream: corpus accumulates only quality, novel docs across batches") {
-    val corpusDir = tmp("ing-corpus")
-    val ckpt = tmp("ing-ckpt")
-    val good = "the quick brown fox jumps over the lazy dog again and again today"
-    val input = MemoryStream[(Long, String, String, String)](spark)
-    val docsDf = input.toDF().toDF("doc_id", "text", "lang", "source")
-
-    val q = Streaming.incrementalIngestStream(docsDf, corpusDir, ckpt)
-    // batch 0: two good docs + one low-quality (digits-heavy) doc
-    input.addData(
-      (1L, good, "en", "s0"),
-      (2L, "completely unrelated words about spark catalyst optimizer internals", "en", "s1"),
-      (9L, "0000 1111 2222 3333 4444 5555 6666 7777 8888 9999", "en", "s1"))
-    q.processAllAvailable()
-    // batch 1: a near-dup of doc 1 (must be rejected) + one novel doc
-    input.addData(
-      (3L, good + " extra", "en", "s0"),
-      (4L, "fresh novel content concerning window functions and watermarks", "en", "s2"))
-    q.processAllAvailable()
-    q.stop()
-
-    val corpus = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(corpus === Set(1L, 2L, 4L),
-      s"expected quality gate to drop 9, near-dup match to drop 3; got $corpus")
-  }
-
-  test("jsonlIngestStream routes good rows to the corpus and corrupt lines to quarantine") {
-    import org.apache.spark.sql.types._
-    val in = tmp("jsonl-in"); val good = tmp("jsonl-good")
-    val quar = tmp("jsonl-quar"); val ckpt = tmp("jsonl-ckpt")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(in, "a.jsonl"),
-      """{"doc_id": 1, "text": "alpha"}
-        |{"doc_id": 2, "text
-        |{"doc_id": 3, "text": "gamma"}
-        |not json at all
-        |{"doc_id": 5, "text": "epsilon"}
-        |""".stripMargin)
-    val q = Streaming.jsonlIngestStream(spark, in, schema, good, quar, ckpt)
-    q.processAllAvailable()
-    // a second file arriving later lands in a NEW batch, same contracts
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(in, "b.jsonl"),
-      """{"doc_id": 6, "text": "zeta"}
-        |{broken again
-        |""".stripMargin)
-    q.processAllAvailable()
-    q.stop()
-    val goodRows = spark.read.parquet(good)
-      .select("doc_id").as[Long].collect().sorted
-    assert(goodRows.toSeq === Seq(1L, 3L, 5L, 6L))
-    val quarRows = spark.read.parquet(quar)
-      .select("raw").as[String].collect()
-    assert(quarRows.length === 3, s"expected 3 quarantined lines, got ${quarRows.toSeq}")
-    assert(quarRows.exists(_.contains("not json at all")))
-    assert(quarRows.exists(_.contains("{broken again")))
-    // every input line is accounted for: good + quarantined = total
-    assert(goodRows.length + quarRows.length === 7)
-  }
-
   test("minhashNearDupStream matches batch minhashPairs on the fixture corpus") {
     // Same banding, same signatures, same estimate: the streaming pair
     // set (deduped — emission is at-least-once across bands) must equal
