@@ -46,7 +46,7 @@ object Layout {
         new org.apache.hadoop.fs.Path(outDir),
       s"compact cannot write into its input directory ($inDir); " +
         "choose a different outDir and swap after the rewrite")
-    val in = spark.read.parquet(inDir)
+    val in = graft.sources.Tables.parquet(spark, inDir)
     val sized = if (shuffle) in.repartition(targetFiles) else in.coalesce(targetFiles)
     val writer = sized.write.mode("overwrite")
     (if (maxRecordsPerFile > 0)

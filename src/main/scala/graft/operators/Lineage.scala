@@ -20,7 +20,7 @@ private[operators] object Lineage {
           val path = s"$dir/${prefix}_$seq"
           seq += 1
           df.write.mode("overwrite").parquet(path)
-          df.sparkSession.read.parquet(path)
+          graft.sources.Tables.parquet(df.sparkSession, path)
         }
       case None => _.localCheckpoint()
     }

@@ -8,6 +8,8 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Versioned table with SNAPSHOT READS (time travel) — the dataset-
   * reproducibility primitive an LLM training estate needs ("which
   * corpus state did run 47 train on?"), built as a miniature
@@ -371,7 +373,7 @@ object TimeTravel {
   private def liveAmong(s: SparkSession, root: String, key: String,
                         kept: Seq[Entry], candidates: DataFrame): DataFrame = {
     val parts = kept.map { e =>
-      val df = s.read.parquet(new Path(root, e.name).toString)
+      val df = Tables.parquet(s, new Path(root, e.name).toString)
       val tomb = if (df.columns.contains("__tombstone"))
         coalesce(col("__tombstone"), lit(false)) else lit(false)
       df.select(col(key), tomb.as("__t"), lit(e.ver).as("__v"))
@@ -570,7 +572,7 @@ object TimeTravel {
     val dirPath = new Path(root, name)
     val files = fileSystem(root).listStatus(dirPath).toSeq
       .map(_.getPath.getName).filter(_.startsWith("part-")).sorted
-    val df = s.read.parquet(dirPath.toString)
+    val df = Tables.parquet(s, dirPath.toString)
     val statsByFile: Map[String, (Long, Long)] =
       if (!integralKey(df, key)) Map.empty
       else df.groupBy(input_file_name().as("__f"))
@@ -607,7 +609,7 @@ object TimeTravel {
     if (entries.nonEmpty &&
         entries.forall(e => e.kind == "base" && e.ver == entries.head.ver)) {
       val parts = entries.map { e =>
-        val df = s.read.parquet(new Path(root, e.name).toString)
+        val df = Tables.parquet(s, new Path(root, e.name).toString)
         keyFilter.map(df.filter).getOrElse(df)
       }
       val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -617,7 +619,7 @@ object TimeTravel {
       }
     }
     val parts = entries.map { e =>
-      val df = s.read.parquet(new Path(root, e.name).toString)
+      val df = Tables.parquet(s, new Path(root, e.name).toString)
       keyFilter.map(df.filter).getOrElse(df).withColumn("__v", lit(e.ver))
     }
     val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -653,7 +655,8 @@ object TimeTravel {
   /** POINT LOOKUP with FILE SKIPPING: the snapshot merge restricted to
     * `points`, reading ONLY the file sets whose manifest [min,max] key
     * stats can contain one of them (Iceberg-style pruning from stats
-    * recorded at commit time — no footer reads, no full-chain scan).
+    * recorded at commit time — pruning reads no footer stats and scans
+    * no full chain).
     * Merge semantics are exact: a pruned file set cannot hold any
     * queried key, so it cannot hold any queried key's winning row or
     * tombstone either. */
@@ -716,7 +719,7 @@ object TimeTravel {
       readManifest(root, v).entries.filter(e => e.kind == "delta" && e.ver == v)
     }
     val changed = deltas.map { e =>
-      s.read.parquet(new Path(root, e.name).toString)
+      Tables.parquet(s, new Path(root, e.name).toString)
         .withColumn("_commit_version", lit(e.ver))
     }
     // a delta-free range (compactions only) is an EMPTY feed with the

@@ -3,8 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.functions.CsvCodec
 import graft.operators.Sorting
@@ -211,7 +210,7 @@ object ParityQueries {
   private[queries] final case class EventFiles(roundRobin: Option[Int],
       eventType: Option[String] = None) extends Replay {
     def frame(s: SparkSession, dir: String): DataFrame = {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.table(s, dir, "events")
       val rows = eventType.fold(ev)(t => ev.filter(col("event_type") === t))
       roundRobin.fold(rows)(rows.repartition)
     }
@@ -252,17 +251,16 @@ object ParityQueries {
     }
   }
 
-  /** A staged [[Replay]]: its directory and the schema its files were
-    * written with. */
-  private[queries] final case class Staged(input: Replay, dir: String,
-      schema: StructType) {
+  /** A staged [[Replay]]: its directory. */
+  private[queries] final case class Staged(input: Replay, dir: String) {
     /** A bounded micro-batch stream over the staged files (or over
-      * `path`, a directory the caller [[land]]s them in): one file per
-      * trigger, or every file in one batch. The schema is declared, so
-      * building it runs no Spark job. */
+      * `path`, a directory the caller [[land]]s them in, which may still
+      * be empty): one file per trigger, or every file in one batch. The
+      * schema is declared from a footer of the staged files
+      * ([[Tables.parquet]]), so building it runs no Spark job. */
     def stream(s: SparkSession, oneFilePerTrigger: Boolean = true,
         path: String = dir): DataFrame = {
-      val r = s.readStream.schema(schema)
+      val r = s.readStream.schema(Tables.parquet(s, dir).schema)
       input.view((if (oneFilePerTrigger) r.option("maxFilesPerTrigger", "1")
         else r).parquet(path))
     }
@@ -281,23 +279,20 @@ object ParityQueries {
     * [[StagedInputs]], under the key `dir|input`. Slice inputs become
     * `slice-k.parquet` files with increasing mtimes, so a one-file-per-
     * trigger stream replays them in order; the others are written as
-    * their frame's partitions. The kept schema is the frame's, made
-    * nullable as Spark writes it. */
+    * their frame's partitions. */
   private[queries] def replay(s: SparkSession, dir: String, input: Replay): Staged =
     StagedInputs(s"$dir|$input") { d =>
       val df = input.frame(s, dir)
-      val rows = input match {
+      input match {
         case _: EventFiles =>
           df.write.mode("overwrite").parquet(d)
-          df
         case _ =>
           val base = System.currentTimeMillis()
           (1 to 3).foreach { k =>
             writeSlice(df.filter(col("batch") === k).drop("batch"), d, k, base)
           }
-          df.drop("batch")
       }
-      Staged(input, d, Bridge.asNullable(rows.schema))
+      Staged(input, d)
     }
 
   private def eventsProjected(s: SparkSession, dir: String): DataFrame =
@@ -681,7 +676,7 @@ object ParityQueries {
           val merged = statePath match {
             case None => delta
             case Some(p) =>
-              graft.operators.Upsert(s.read.parquet(p), delta, "user_id")
+              graft.operators.Upsert(Tables.parquet(s, p), delta, "user_id")
           }
           val next = s"$stateRoot/state-$batchId"
           merged.write.mode("overwrite").parquet(next)
@@ -690,7 +685,7 @@ object ParityQueries {
         }
         .start()
       q.awaitTermination()
-      s.read.parquet(statePath.get)
+      Tables.parquet(s, statePath.get)
         .select(col("user_id"), col("ts_ms"), col("event_type"),
           round(col("value"), 4).as("value_r"))
         .orderBy("user_id")
@@ -719,7 +714,7 @@ object ParityQueries {
       // v0: an EMPTY base — the table exists before the first batch,
       // so every micro-batch goes through the same idempotent path
       TimeTravel.init(
-        s.read.schema(in.schema).parquet(in.dir).limit(0)
+        Tables.parquet(s, in.dir).limit(0)
           .select(col("user_id"), col("ts_ms"), col("event_type"),
             col("value")),
         root, "user_id")
@@ -983,7 +978,7 @@ object ParityQueries {
         require(commits1.nonEmpty && commits1.subsetOf(commits2) &&
             commits2.size > commits1.size,
           s"run 2 did not resume the checkpoint: $commits1 -> $commits2")
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .groupBy(col("user_id"))
           .agg(max(col("n")).as("n"),
             max_by(col("cents"), col("n")).as("cents"),
@@ -1100,8 +1095,8 @@ object ParityQueries {
       // synchronized with whatever the staging wrote, no second copy
       // of the tertile formula, no full-table scan; day-aligned
       // tertiles mean the floor-hour window holds only slice-3 rows
-      val slice3Min = s.read.schema(in.schema)
-        .parquet(new java.io.File(in.dir, "slice-3.parquet").getPath)
+      val slice3Min = Tables.parquet(s,
+          new java.io.File(in.dir, "slice-3.parquet").getPath)
         .agg(min(col("ts_ms"))).head()
       require(!slice3Min.isNullAt(0), "staged slice 3 is empty")
       val lo3Ms = (slice3Min.getLong(0) / 3600000L) * 3600000L

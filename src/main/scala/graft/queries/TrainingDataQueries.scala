@@ -2319,7 +2319,7 @@ object TrainingDataQueries {
         .repartition(16)
         .write.mode("overwrite").parquet(frag)
       Layout.compact(s, frag, out, targetFiles = 2)
-      s.read.parquet(out).orderBy("event_id")
+      Tables.parquet(s, out).orderBy("event_id")
     }),
 
     // TIME TRAVEL graded — dataset reproducibility, the read-back-in-
@@ -3112,6 +3112,7 @@ object TrainingDataQueries {
       docs.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").parquet(root + "/v2")
+      // plain read: the union schema merges two footers, not one
       s.read.option("mergeSchema", "true").parquet(root + "/v1", root + "/v2")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           md5(col("text")).as("text_md5"))
@@ -3306,7 +3307,7 @@ object TrainingDataQueries {
     // metadata columns are generated AT the scan (constant per
     // file/position), so requesting them adds no pass and no shuffle.
     "q_metadata_columns" -> ((s, dir) => {
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Tables.table(s, dir, "events")
       raw.select(
           expr("regexp_extract(_metadata.file_path, '([^/]+)$', 1)").as("file"),
           col("_metadata.row_index").as("ri"))
@@ -3336,6 +3337,8 @@ object TrainingDataQueries {
       }
       val minSource = Tables.documents(s, dir)
         .agg(min(col("source"))).first().getString(0)
+      // plain read: the partition column `source` comes from the
+      // directory names, which no file footer holds
       s.read.parquet(out)
         .filter(col("source") === lit(minSource))
         .groupBy(col("lang"))

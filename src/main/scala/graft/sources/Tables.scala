@@ -1,8 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
-/** Loaders for the driver-provided Parquet fixtures (TESTDATA.md).
+/** Loaders for the driver-provided Parquet fixtures (TESTDATA.md), and
+  * [[parquet]], the one Parquet read of the engine.
   *
   * All graded queries read through here so that scan-level concerns
   * (column pruning, predicate pushdown, partition sizing) are applied
@@ -10,6 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * their join keys; the loaders deliberately return the raw scan and let
   * Catalyst push filters/projections down into the Parquet reader —
   * verify with `.explain("formatted")` → `PushedFilters` / `ReadSchema`.
+  * Every read declares the schema of one file's footer, read on the
+  * driver, so building a table's frame runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,7 +26,44 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Parquet at `path`, a file or a directory of files, read with the
+    * schema Spark's non-merging inference gives it, but without that
+    * inference's Spark job: the schema comes from one footer read on the
+    * driver. The file is one that inference could take: `path` itself,
+    * or a directory's first data file by name (names starting with `_`
+    * or `.` are not data). The footer converts as inference converts
+    * it, under the session's SQL conf (`nanosAsLong`, NTZ inference) and
+    * Spark's own row-metadata schema when the writer stored one, so both
+    * physical forms of `events.ts` read as before. All files under
+    * `path` must share that schema, as inference assumes too. A missing
+    * path, or a directory with no data file, is left to Spark's own read
+    * and its error. Nothing is cached: each call reads the footer anew. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      (try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None })
+        .flatMap { status =>
+          if (!status.isDirectory) Some(status)
+          else fs.listStatus(p).toSeq
+            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+              !f.getPath.getName.startsWith("."))
+            .sortBy(_.getPath.getName).headOption
+        }
+    file match {
+      case Some(f) =>
+        val footer = new Footer(f.getPath,
+          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+        val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(state.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.Session
 import graft.functions.CsvCodec
-import graft.sources.RecordGenerator
+import graft.sources.{RecordGenerator, Tables}
 
 /** The reference's END-TO-END workload at its published scale: generate
   * N CSV records (default 50 M ≙ `cmd/producer/main.go:21`), persist them
@@ -76,7 +76,7 @@ object RefBench {
       ("continent", 3, StringType, useSpread))
     val sortSecs = keys.map { case (key, fieldPos, dt, spread) =>
       val (_, t) = timed {
-        val extracted = spark.read.parquet(src)
+        val extracted = Tables.parquet(spark, src)
           .withColumn("__key", CsvCodec.fieldAs(col("line"), fieldPos, dt))
         val sorted =
           if (spread)
@@ -90,7 +90,7 @@ object RefBench {
 
     // On --reuse the source may hold a different row count than the CLI
     // n — rates must reflect what was actually sorted.
-    val actualN = if (reuse) spark.read.parquet(src).count() else n
+    val actualN = if (reuse) Tables.parquet(spark, src).count() else n
     val rates = sortSecs.map { case (k, t) => s""""$k":${(actualN / t).toLong}""" }.mkString(",")
     val times = sortSecs.map { case (k, t) => s""""$k":$t""" }.mkString(",")
     // gen fields are omitted on --reuse (a ~0s skipped block is not a rate)

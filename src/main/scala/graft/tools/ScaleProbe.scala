@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Session
 import graft.operators.{Dedup, Graph, Hierarchy, Similarity, Sweep, TextAnalysis}
+import graft.sources.Tables
 
 /** Empirical scaling probe for the near-dup operators: replicates the
   * sf0.1 documents corpus xN (ids shifted, text perturbed per copy so
@@ -20,7 +21,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = Session.local()
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Tables.documents(spark, sfDir)
       .select("doc_id", "text")
     val nBase = base.count()
 
@@ -167,7 +168,7 @@ object ScaleProbe {
       // also linear. Any superlinear growth here would mean the argmin
       // or scoring shuffle picked up a corpus-sized key.
       if (new java.io.File(s"$sfDir/embeddings.parquet").exists) {
-        val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        val emb0 = Tables.embeddings(spark, sfDir)
           .select("vec_id", "embedding")
         val embN = (0 until factor).map { i =>
           emb0.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
@@ -410,7 +411,7 @@ object ScaleProbe {
     }
     def runStream(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
                   dir: String): (Long, Long, Long, Int) = {
-      val schema = spark.read.parquet(dir).schema
+      val schema = Tables.parquet(spark, dir).schema
       val in = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       val ckpt = java.nio.file.Files.createTempDirectory("graft-probe-ck").toString

@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge to `private[sql]`/`private[spark]` internals: the
   * Column↔Expression converters — the supported way for libraries to
   * attach custom Catalyst expressions to the public Column API in
-  * Spark 4's split API/classic layout — and `StructType.asNullable`. */
+  * Spark 4's split API/classic layout — and the function registry. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -19,9 +19,4 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
-
-  /** `schema` with every field, nested ones included, nullable: the
-    * schema Spark writes a frame's files with. */
-  def asNullable(schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

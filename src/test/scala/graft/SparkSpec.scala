@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +13,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def flush(): Unit =
+      org.apache.spark.graftbridge.CoreBridge.waitUntilListenerBusEmpty(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    flush()
+    sc.addSparkListener(l)
+    try { body; flush() } finally sc.removeSparkListener(l)
+    n.get
+  }
 }
 
 object SparkSpec {

@@ -109,6 +109,38 @@ class TimeTravelSpec extends SparkSpec {
       Seq("k", "seg", "v", "_commit_version", "_change_type"))
   }
 
+  test("TimeTravel: snapshot, snapshotAt and changes build with zero Spark jobs over entries whose columns differ") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttj-spec").toString
+    TimeTravel.init((1L to 10L).map(k => (k, "a", k)).toDF("k", "seg", "v"), root, "k")
+    // v1 adds `extra`; v2 writes the base columns; v3's tombstones
+    // carry the key alone
+    TimeTravel.upsert(root, Seq((2L, "b", 20L, 7L)).toDF("k", "seg", "v", "extra"))
+    TimeTravel.upsert(root, Seq((3L, "c", 30L)).toDF("k", "seg", "v"))
+    TimeTravel.delete(root, Seq(Tuple1(4L)).toDF("k"))
+    // each chain entry's schema is a driver-side footer read
+    assert(jobsDuring {
+      TimeTravel.snapshot(spark, root, 3L, "k")
+      TimeTravel.snapshotAt(spark, root, 3L, "k", Seq(2L, 3L))
+      TimeTravel.changes(spark, root, 0L, 3L, "k")
+    } === 0)
+    // the union still fills the columns an entry lacks with null
+    val snap = TimeTravel.snapshot(spark, root, 3L, "k")
+    assert(snap.columns.toSeq === Seq("k", "seg", "v", "extra"))
+    val got = snap.select("k", "seg", "v", "extra")
+      .as[(Long, String, Long, Option[Long])].collect().map(r => r._1 -> r).toMap
+    assert(got.size === 9 && !got.contains(4L))
+    assert(got(1L) === ((1L, "a", 1L, None)) && got(2L) === ((2L, "b", 20L, Some(7L))) &&
+      got(3L) === ((3L, "c", 30L, None)))
+    assert(TimeTravel.snapshotAt(spark, root, 3L, "k", Seq(2L, 3L))
+      .select("k", "extra").as[(Long, Option[Long])].collect().toSet ===
+      Set((2L, Some(7L)), (3L, None)))
+    val ch = TimeTravel.changes(spark, root, 0L, 3L, "k")
+    assert(ch.columns.contains("extra"))
+    assert(ch.select("k", "_commit_version", "_change_type")
+      .as[(Long, Long, String)].collect().toSet ===
+      Set((2L, 1L, "update"), (3L, 2L, "update"), (4L, 3L, "delete")))
+  }
+
   test("TimeTravel.delete: versioned tombstones, revival, changes tagging") {
     val root = java.nio.file.Files.createTempDirectory("graft-ttd-spec").toString
     val base = (1L to 10L).map(k => (k, "a", k)).toDF("k", "seg", "v")

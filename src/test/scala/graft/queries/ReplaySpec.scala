@@ -1,8 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,25 +7,11 @@ import graft.queries.ParityQueries._
 import graft.sources.Tables
 
 /** The replay source of the staged stream queries: staged once per JVM,
-  * read back with its kept schema, laid out deterministically. */
+  * read back with the schema of its files' footers, laid out
+  * deterministically. */
 class ReplaySpec extends SparkSpec {
 
   private lazy val dir = sf("sf0.001")
-
-  /** Spark jobs started while `body` runs, counted by a listener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def flush(): Unit =
-      org.apache.spark.graftbridge.CoreBridge.waitUntilListenerBusEmpty(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    flush()
-    sc.addSparkListener(l)
-    try { body; flush() } finally sc.removeSparkListener(l)
-    n.get
-  }
 
   private def perFileRows(st: Staged): Seq[(String, Long)] =
     new java.io.File(st.dir).listFiles()
@@ -63,13 +46,18 @@ class ReplaySpec extends SparkSpec {
     }
   }
 
-  test("the kept schema is the one a read of the staged files infers") {
+  test("a staged stream declares the inferred schema, also on an empty landing dir") {
     Seq(EventFiles(Some(3)), EventFiles(None), EventFiles(Some(3), Some("click")),
         EventTertiles, EventSlices(Seq("event_id", "ts_ms", "user_id"), Some("click")),
         EventSlices(Seq("event_id", "ts_ms", "event_type", "value"), plantLate = true),
         DocSlices).foreach { input =>
       val st = replay(spark, dir, input)
-      assert(st.schema === spark.read.parquet(st.dir).schema, s"$input")
+      val inferred = input.view(spark.read.parquet(st.dir)).schema
+      assert(st.stream(spark).schema === inferred, s"$input")
+      // a restart query's landing dir is empty when its first run starts
+      val landing = java.nio.file.Files.createTempDirectory("graft-replay-land").toString
+      assert(st.stream(spark, oneFilePerTrigger = false, landing).schema === inferred,
+        s"$input")
     }
   }
 
