@@ -370,14 +370,15 @@ object ParityQueries {
     // a mis-sorted batch, a lost/duplicated row, or a broken
     // writer→partition mapping all flip the hash.
     "stream_sorted_copy" -> ((s, dir) => withShufflePartitions(s, 4) {
-      import graft.sources.{MemTopic, MemTopicProvider}
+      import graft.sources.MemTopic
+      import graft.streaming.Streaming
       val uid = java.util.UUID.randomUUID().toString.take(8)
       val srcTopic = s"graft_stream_src_$uid"
       val dstTopic = s"graft_stream_sorted_$uid"
-      // sorted topic partitions ≥ the sort's task count, so the sink's
-      // task-i → partition-(i mod n) mapping is the identity
+      // one sorted-topic partition per task of the sort (the pin above),
+      // so the sink's task-i → partition-(i mod n) mapping is the identity
       MemTopic.create(srcTopic, numPartitions = 3)
-      MemTopic.create(dstTopic, numPartitions = 64)
+      MemTopic.create(dstTopic, numPartitions = Streaming.sortTasks(s))
       val c = Tables.customer(s, dir)
       MemTopic.write(c.select(CsvCodec.encode(
         col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")).as("line")),
@@ -389,22 +390,16 @@ object ParityQueries {
         "id" -> LongType, "name" -> StringType,
         "nationkey" -> IntegerType, "segment" -> StringType))
       val ckpt = ScratchDirs("graft-stream-ckpt")
-      graft.streaming.Streaming.sortedCopy(
-        decoded, dstTopic, ckpt, Seq(col("id"), col("name")))
+      Streaming.sortedCopy(decoded, dstTopic, ckpt, Seq(col("id"), col("name")))
         .awaitTermination()
       // the source topic is fully drained and nothing downstream reads
       // it — drop it now; the sorted topic must outlive this call (the
       // returned plan scans it lazily), so it drops on JVM exit
       MemTopic.drop(srcTopic)
       ScratchTopics.register(dstTopic)
-      // ordinal assignment via the globalIds two-pass (range partition +
-      // per-partition offsets) — the read-back is graded at topic size, so
-      // a global row_number window would funnel it through ONE task
-      val back = Sorting.globalIds(
-          s.read.format(classOf[MemTopicProvider].getName)
-            .option("topic", dstTopic).load(),
-          col("partition"), col("offset"))
-        .withColumn("pos", col("gid") + lit(1L))
+      // the ordinal comes from the sorted topic's end offsets, read on the
+      // driver: no Spark job at build, no window or shuffle to number it
+      val back = MemTopic.readNumbered(s, dstTopic)
       CsvCodec.decode(back.select(col("value").as("line"), col("pos")),
           col("line"), Seq(
             "id" -> LongType, "name" -> StringType,

@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, element_at, typedLit}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -100,6 +100,22 @@ object MemTopic {
     df.select(col("line").cast("string").as("value"))
       .write.format(classOf[MemTopicProvider].getName)
       .option("topic", topic).mode("append").save()
+
+  /** Bounded read of `topic` numbered in (partition, offset) order, the
+    * validation consumer's view: the end offsets are read once, here on
+    * the driver, and the record at (p, o) gets
+    * `pos = ends(0) + … + ends(p − 1) + o + 1`, so `pos` runs 1..N
+    * without a Spark job, a shuffle or a window. The scan keeps only
+    * offsets below those ends, so a record appended after this call is
+    * neither read nor numbered. */
+  def readNumbered(spark: SparkSession, topic: String): DataFrame = {
+    val ends = (0 until numPartitions(topic)).map(endOffset(topic, _))
+    def at(v: Seq[Long]) = element_at(typedLit(v), col("partition") + 1)
+    spark.read.format(classOf[MemTopicProvider].getName)
+      .option("topic", topic).load()
+      .filter(col("offset") < at(ends))
+      .withColumn("pos", at(ends.scanLeft(0L)(_ + _)) + col("offset") + 1L)
+  }
 
   /** Streaming read of `topic` as one `line` column (the live form of
     * the bounded O4 scan, [[MemTopicMicroBatchStream]]). */

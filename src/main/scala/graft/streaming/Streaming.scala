@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -27,10 +27,9 @@ object Streaming {
   /** EP2 as a stream, into a topic (reference O4 → O7–O10): each
     * micro-batch of `stream` is range-partition total-sorted and
     * appended to the MemTopic `topic` ([[graft.sources.MemTopic.write]])
-    * with writer→partition identity (task i → topic partition i,
-    * provided the topic has ≥ task-count partitions), so for a
-    * single-batch `AvailableNow` run the (partition, offset) read order
-    * IS the global sort order — the "single ordered topic" form the
+    * with writer→partition identity (task i → topic partition i), so
+    * for a single-batch `AvailableNow` run the (partition, offset) read
+    * order IS the global sort order — the "single ordered topic" form the
     * reference validates (`scripts/test_validation.sh`). On a live
     * source it degrades gracefully to per-batch ordering (global total
     * order across an unbounded stream is undefined — the reference can
@@ -39,9 +38,16 @@ object Streaming {
     * Delivery: each batch's append commits atomically, but a batch
     * replayed after its append committed (a restart between the sink
     * commit and the checkpoint commit) appends again — at-least-once,
-    * like a non-transactional Kafka producer. */
+    * like a non-transactional Kafka producer. The sink sends task i to
+    * partition i mod n, so a topic with fewer partitions than
+    * [[sortTasks]] would interleave key ranges: that fails here, before
+    * the query starts. */
   def sortedCopy(stream: DataFrame, topic: String, checkpointDir: String,
-                 sortCols: Seq[Column]): StreamingQuery =
+                 sortCols: Seq[Column]): StreamingQuery = {
+    val parts = graft.sources.MemTopic.numPartitions(topic)
+    val tasks = sortTasks(stream.sparkSession)
+    require(parts >= tasks, s"sorted topic '$topic' has $parts partitions, " +
+      s"fewer than the sort's $tasks tasks: task i writes partition i mod $parts")
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
@@ -51,6 +57,14 @@ object Streaming {
           topic)
       }
       .start()
+  }
+
+  /** The most tasks a sort in `spark` can run: Spark's shuffle partition
+    * count, `spark.sql.shuffle.partitions`, or AQE's
+    * `coalescePartitions.initialPartitionNum` when that is set. */
+  def sortTasks(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
 
   /** Event-time tumbling-window aggregation with a watermark: the
     * streaming twin of the batch `q_time_window` query. Late events

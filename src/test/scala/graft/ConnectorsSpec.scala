@@ -124,6 +124,32 @@ class ConnectorsSpec extends SparkSpec {
     } finally { MemTopic.drop("source"); MemTopic.drop("sorted_id") }
   }
 
+  test("MemTopic readNumbered: pos is the (partition, offset) ordinal from the end offsets") {
+    MemTopic.create("numbered", numPartitions = 4)
+    try {
+      // uneven partitions, partition 1 empty
+      MemTopic.append("numbered", 0, Seq("a0", "a1", "a2"))
+      MemTopic.append("numbered", 2, Seq("c0", "c1", "c2", "c3", "c4"))
+      MemTopic.append("numbered", 3, Seq("d0", "d1"))
+      var numbered: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { numbered = MemTopic.readNumbered(spark, "numbered") } === 0,
+        "the end offsets come from the driver, not from a Spark job")
+      // appended after the end offsets were read, into the empty and a
+      // non-empty partition
+      MemTopic.append("numbered", 1, Seq("late-b"))
+      MemTopic.append("numbered", 3, Seq("late-d"))
+      assert(topicLines("numbered").count() === 12)
+
+      val got = numbered.orderBy("pos")
+        .select("value", "partition", "offset", "pos")
+        .as[(String, Int, Long, Long)].collect().toSeq
+      assert(got.map(_._4) === (1L to 10L), "pos is dense 1..N")
+      assert(got.map(_._1) ===
+        Seq("a0", "a1", "a2", "c0", "c1", "c2", "c3", "c4", "d0", "d1"),
+        "pos order is (partition, offset) order; late rows are not read")
+    } finally MemTopic.drop("numbered")
+  }
+
   test("MemTopic MicroBatchStream: offset-tracked micro-batches, resume from checkpoint") {
     import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger

@@ -46,6 +46,53 @@ class StreamingSpec extends SparkSpec {
     } finally MemTopic.drop("sorted_copy_events")
   }
 
+  test("sortedCopy fails at start when the topic has fewer partitions than the sort's tasks") {
+    import graft.functions.CsvCodec
+    import graft.queries.ParityQueries.withConf
+    import graft.sources.MemTopic
+    import org.apache.spark.sql.types.IntegerType
+    val ms = MemoryStream[String](spark)
+    ms.addData("2,b", "1,a")
+    val decoded = CsvCodec.decode(ms.toDF().toDF("line"), col("line"),
+      Seq("id" -> IntegerType))
+    def start(topic: String): Unit =
+      Streaming.sortedCopy(decoded, topic, tmp("graft-narrow-ckpt"), Seq(col("id")))
+        .awaitTermination()
+    MemTopic.create("narrow_sorted", numPartitions = 2)
+    MemTopic.create("wide_sorted", numPartitions = 8)
+    try {
+      val narrow = intercept[IllegalArgumentException] {
+        withConf(spark, "spark.sql.shuffle.partitions", "4")(start("narrow_sorted"))
+      }
+      assert(narrow.getMessage.contains("2 partitions") &&
+        narrow.getMessage.contains("4 tasks"), narrow.getMessage)
+      // AQE's initial partition count, when set, is the sort's task count
+      val wide = intercept[IllegalArgumentException] {
+        withConf(spark, "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+          "16")(start("wide_sorted"))
+      }
+      assert(wide.getMessage.contains("8 partitions") &&
+        wide.getMessage.contains("16 tasks"), wide.getMessage)
+      assert(spark.streams.active.isEmpty, "no query started")
+      assert(MemTopic.endOffset("narrow_sorted", 0) === 0L)
+    } finally { MemTopic.drop("narrow_sorted"); MemTopic.drop("wide_sorted") }
+  }
+
+  test("stream_sorted_copy over sf0.001: pos is 1..N, keys ordered by pos, rows are customer's") {
+    val dir = sf("sf0.001")
+    val got = SparkEntry.queries("stream_sorted_copy")(spark, dir)
+      .select("id", "name", "nationkey", "segment", "pos")
+      .as[(Long, String, Int, String, Long)].collect().toSeq
+    assert(got.map(_._5) === (1L to got.length.toLong), "pos is dense 1..N")
+    val keys = got.map(r => (r._1, r._2))
+    assert(keys === keys.sorted, "(id, name) is non-decreasing in pos order")
+    val customer = Tables.customer(spark, dir)
+      .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
+      .as[(Long, String, Int, String)].collect().toSeq
+    assert(got.map(r => (r._1, r._2, r._3, r._4)).sorted === customer.sorted,
+      "the sorted topic holds exactly customer's rows")
+  }
+
   test("enrichStream: stream-static dimension join equals the batch join") {
     val events = Tables.events(spark, sf("sf0.001"))
       .select("event_id", "user_id", "event_type")
