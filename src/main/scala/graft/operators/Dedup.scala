@@ -392,8 +392,8 @@ object Dedup {
     * distinct pairs); duplicate edges cost extra join work but do not
     * affect the result. Returns ((node, component), rounds); `rounds` is
     * the convergence count — DedupSpec's 64-node chain test asserts the
-    * O(log n) bound, and tools.ScaleProbe reports it at 1×/4×/16×
-    * corpus scale. */
+    * O(log n) bound; COVERAGE.md's (historical) dedup scaling probes
+    * record it at 1×/4×/16× corpus scale. */
   def connectedComponentsWithRounds(pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 30,

@@ -37,9 +37,10 @@ object Hierarchy {
     * round twice (the self-join), so an uncut walk is O(2^rounds) plan
     * nodes: beyond ~12 rounds Catalyst analysis dominates wall time and
     * the driver eventually OOMs just RENDERING the tree (observed at 15
-    * rounds in ScaleProbe). `cutEvery` therefore cuts lineage every few
-    * rounds — `localCheckpoint` by default, a parquet round-trip under
-    * `checkpointDir` for cluster-grade fault tolerance, exactly the
+    * rounds; COVERAGE.md's historical hierarchy probe notes). `cutEvery`
+    * therefore cuts lineage every few rounds — `localCheckpoint` by
+    * default, a parquet round-trip under `checkpointDir` for
+    * cluster-grade fault tolerance, exactly the
     * [[Dedup.connectedComponentsWithRounds]] policy. Results are
     * unaffected (the cut is a materialization barrier, not a semantic
     * change). */

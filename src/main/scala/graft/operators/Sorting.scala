@@ -35,14 +35,6 @@ object Sorting {
   def totalSort(df: DataFrame, keys: Column*): DataFrame =
     df.orderBy(keys: _*)
 
-  /** Scale path for "one totally ordered output": explicit range
-    * repartition + per-partition sort, so each of `numPartitions` outputs
-    * is written in parallel and partition i holds keys ≤ partition i+1.
-    * Identical plan shape to `orderBy` but makes the partition count an
-    * explicit knob for sizing output files at 100 TB. */
-  def totalSortPartitioned(df: DataFrame, numPartitions: Int, keys: Column*): DataFrame =
-    df.repartitionByRange(numPartitions, keys: _*).sortWithinPartitions(keys: _*)
-
   /** Total sort for LOW-CARDINALITY keys (the reference's `continent`: 6
     * values over 50 M rows): a plain `orderBy(key)` range-partitions into
     * at most |distinct keys| non-empty partitions, capping parallelism at
@@ -57,41 +49,17 @@ object Sorting {
 
   /** Contiguous global ids 0..N−1 in total `order` without a
     * single-partition window. `row_number() OVER (ORDER BY …)` — the
-    * naive formulation — funnels ALL rows through one task; this is the
-    * classic zipWithIndex two-pass instead: (1) range-partition + sort
-    * within partitions on the order keys (the same one exchange any
-    * total sort pays); (2) a count pass collects ONE long per partition
-    * (driver state is the partition count, never the data); (3) a
-    * numbering pass adds each partition's running offset to a local
-    * counter, in parallel across partitions.
-    *
-    * Both passes run over the SAME RDD instance, so the sampled range
-    * boundaries are fixed when the shuffle dependency is first created
-    * and the second pass reuses the first's shuffle files — nothing is
-    * pinned in executor memory (the previous formulation
-    * localCheckpointed the ranged data, which holds a full copy in
-    * executor block storage and dies with a lost executor; shuffle
-    * files are already on local disk and recoverable by stage retry on
-    * any cluster). The per-partition imperative numbering is exactly
-    * the "genuine per-partition logic" case where dropping to the RDD
-    * API is warranted. The order must be total (include a unique
-    * tiebreak) or ids within ties are partition-placement-dependent. */
-  def globalIds(df: DataFrame, order: Column*): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val spark = df.sparkSession
-    val ranged = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val rdd = ranged.rdd // ONE instance: boundaries sampled once, shuffle reused
-    val counts = rdd.mapPartitionsWithIndex { (i, it) =>
-      Iterator((i, it.foldLeft(0L)((n, _) => n + 1)))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var gid = offsets(i) - 1
-      it.map { r => gid += 1; Row.fromSeq(r.toSeq :+ gid) }
-    }
-    spark.createDataFrame(out, ranged.schema.add("gid", LongType, nullable = false))
-  }
+    * naive formulation — funnels ALL rows through one task; this is a
+    * running count instead: [[Sweep.runningSum]] of 1 per row, shifted
+    * down by one. That is the classic zipWithIndex two-pass (one range
+    * exchange, one long per partition on the driver, a parallel
+    * numbering pass over the same shuffle files), so driver state is the
+    * partition count, never the data. The order must be total (include
+    * a unique tiebreak) or ids within ties are partition-placement-
+    * dependent. */
+  def globalIds(df: DataFrame, order: Column*): DataFrame =
+    Sweep.runningSum(df, lit(1L), "gid", order: _*)
+      .withColumn("gid", col("gid") - 1L)
 
   /** Top-k by key — the scalable replacement for "sort then take first k":
     * Spark plans `orderBy.limit` as `TakeOrderedAndProject`, a per-partition

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.LongType
   * The naive formulation — `sum(x) OVER (ORDER BY …)` with no
   * PARTITION BY — funnels the entire dataset through ONE task (Spark
   * even warns: "No Partition Defined for Window operation"). The shape
-  * here is the classic two-pass split this library already uses for
-  * global ids ([[Sorting.globalIds]]), generalized from row counting to
-  * an arbitrary additive measure:
+  * here is the classic zipWithIndex two-pass split, generalized from
+  * row counting to an arbitrary additive measure (global ids,
+  * [[Sorting.globalIds]], are its running count of 1 per row):
   *
   *  1. range-partition + sort within partitions on the order keys (the
   *     same single exchange any global ordering pays);

@@ -635,9 +635,10 @@ object ParityQueries {
         col("user_id"), col("ts_ms").as("l_ts"))
       val right = rd("purchase").select(col("event_id").as("r_event"),
         col("user_id"), col("ts_ms").as("r_ts"))
-      val joined = graft.streaming.Streaming.streamStreamLeftOuterJoin(
+      val joined = graft.streaming.Streaming.streamStreamIntervalJoin(
         left, right, Seq("user_id"), leftTsMs = "l_ts", rightTsMs = "r_ts",
-        lowerMs = 0L, upperMs = 21600000L, watermark = "1 hour")
+        lowerMs = 0L, upperMs = 21600000L, watermark = "1 hour",
+        joinType = "left_outer")
       drain(joined.select("l_event", "r_event", "user_id", "l_ts", "r_ts"), "append")
         .orderBy(col("l_event"), col("r_event").asc_nulls_first)
     }),
@@ -1050,9 +1051,9 @@ object ParityQueries {
     // (commit-then-retry), lost state (reload miss), or dropped rows
     // all flip the hash. Needs a retry budget: local masters run with
     // maxFailures=1 unless `local[N,F]` — every session in this repo
-    // (Verify/Bench/specs/PlanDump) grants F=2, and the require makes a
-    // budget-less session fail loudly instead of silently skipping the
-    // injection.
+    // (`Session.local`: Verify, Bench, specs, tools) grants F=2, and the
+    // require makes a budget-less session fail loudly instead of
+    // silently skipping the injection.
     "stream_task_retry" -> ((s, dir) => taskRetryQuery(s, dir)),
 
     // The SAME mid-batch task-failure grade on the RocksDB state store:

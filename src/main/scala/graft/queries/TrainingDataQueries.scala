@@ -3322,7 +3322,7 @@ object TrainingDataQueries {
     // of documents by source (the layout every 100 TB corpus uses for
     // its coarse access dimension), then an aggregate whose source
     // predicate is answered by DIRECTORY pruning — the scan lists only
-    // the matching partition (PLANS.md shows it as PartitionFilters
+    // the matching partition (PlanShapeSpec asserts it in PartitionFilters
     // with the data filter gone). The filter value is the min source,
     // inlined as a literal so pruning happens at plan time; the oracle
     // applies the same predicate to the unpartitioned parquet.

@@ -120,12 +120,26 @@ object Streaming {
                    joinCols: Seq[String]): DataFrame =
     stream.join(broadcast(dim), joinCols)
 
-  /** Stream–stream INNER join on a key within an event-time interval:
-    * right events in [left − lowerMs, left + upperMs]. Both sides are
+  /** Stream–stream join on a key within an event-time interval: right
+    * events in [left − lowerMs, left + upperMs]. Both sides are
     * watermarked and the join condition bounds both event-time columns,
     * which is exactly what lets the engine EXPIRE join state — without
     * the time bounds a stream–stream join buffers both streams forever.
     * State per key ≈ the watermark horizon + interval width of rows.
+    *
+    * `joinType` is `"inner"` (the default) or `"left_outer"`. Left outer
+    * EMITS an unmatched left row with a null right side — and only once
+    * the watermark proves no future right row can still match (the
+    * engine holds the left row in join state until `l_event_time +
+    * upperMs` falls behind the eviction watermark, then flushes the null
+    * result). This is the semantics that makes outer results correct on
+    * unbounded streams: emitting the null row any earlier could be
+    * contradicted by a late match. Left rows whose expiry horizon is
+    * still ahead of the final watermark when a bounded run ends are
+    * NEVER emitted as null — the bounded-run analogue of "the stream
+    * might still match them". The watermark delay is therefore a REAL
+    * one for left outer (not the span-wider-than-fixture pin an inner
+    * join may use): null emission is driven by watermark passage.
     *
     * Column contract: the two sides' non-key columns must not collide
     * (rename upstream); the watermarked time columns come out as
@@ -136,7 +150,12 @@ object Streaming {
                                rightTsMs: String = "ts_ms",
                                lowerMs: Long = 0L,
                                upperMs: Long = 1800000L,
-                               watermark: String = "1 hour"): DataFrame = {
+                               watermark: String = "1 hour",
+                               joinType: String = "inner"): DataFrame = {
+    // the right side's key columns are dropped below, which only keeps
+    // every key when each output row has a left row
+    require(joinType == "inner" || joinType == "left_outer",
+      s"streamStreamIntervalJoin: joinType must be inner or left_outer, not $joinType")
     val l = left
       .withColumn("l_event_time", timestamp_millis(col(leftTsMs)))
       .withWatermark("l_event_time", watermark).alias("l")
@@ -150,46 +169,7 @@ object Streaming {
         expr(s"INTERVAL $lowerMs MILLISECONDS") &&
       col("r.r_event_time") <= col("l.l_event_time") +
         expr(s"INTERVAL $upperMs MILLISECONDS")
-    joinCols.foldLeft(l.join(r, keyCond && timeCond)) {
-      (df, c) => df.drop(col(s"r.$c"))
-    }
-  }
-
-  /** Stream–stream LEFT OUTER interval join: like
-    * [[streamStreamIntervalJoin]], but an unmatched left row EMITS with
-    * a null right side — and only once the watermark proves no future
-    * right row can still match (the engine holds the left row in join
-    * state until `l_event_time + upperMs` falls behind the eviction
-    * watermark, then flushes the null result). This is the semantics
-    * that makes outer results correct on unbounded streams: emitting
-    * the null row any earlier could be contradicted by a late match.
-    * Left rows whose expiry horizon is still ahead of the final
-    * watermark when a bounded run ends are NEVER emitted as null —
-    * the bounded-run analogue of "the stream might still match them".
-    * The watermark delay is therefore a REAL one here (not the
-    * span-wider-than-fixture pin the inner-join query uses): null
-    * emission is driven by watermark passage. */
-  def streamStreamLeftOuterJoin(left: DataFrame, right: DataFrame,
-                                joinCols: Seq[String],
-                                leftTsMs: String = "ts_ms",
-                                rightTsMs: String = "ts_ms",
-                                lowerMs: Long = 0L,
-                                upperMs: Long = 1800000L,
-                                watermark: String = "1 hour"): DataFrame = {
-    val l = left
-      .withColumn("l_event_time", timestamp_millis(col(leftTsMs)))
-      .withWatermark("l_event_time", watermark).alias("l")
-    val r = right
-      .withColumn("r_event_time", timestamp_millis(col(rightTsMs)))
-      .withWatermark("r_event_time", watermark).alias("r")
-    val keyCond = joinCols.map(c => col(s"l.$c") === col(s"r.$c"))
-      .reduce(_ && _)
-    val timeCond =
-      col("r.r_event_time") >= col("l.l_event_time") -
-        expr(s"INTERVAL $lowerMs MILLISECONDS") &&
-      col("r.r_event_time") <= col("l.l_event_time") +
-        expr(s"INTERVAL $upperMs MILLISECONDS")
-    joinCols.foldLeft(l.join(r, keyCond && timeCond, "left_outer")) {
+    joinCols.foldLeft(l.join(r, keyCond && timeCond, joinType)) {
       (df, c) => df.drop(col(s"r.$c"))
     }
   }

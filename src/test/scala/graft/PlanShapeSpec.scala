@@ -1,7 +1,16 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{CollectLimitExec, ExplainMode, GlobalLimitExec,
+  LocalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
+import scala.util.{Failure, Success, Try}
 
 /** Plan-shape regression tests for the scale-critical invariants the
   * operators were designed around. These assert the PHYSICAL PLAN, not
@@ -139,28 +148,106 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Red flags the sweep expects, with the reason each is the intended
+    * plan. All are BNLJs whose build side is small by construction in a
+    * way the `bounded` test cannot see: a `vec_id < N` query filter, k
+    * centroids collected to a local relation, or a literal dimension.
+    * Every other flag fails the sweep, and so does an entry here that no
+    * longer fires, so the list cannot outlive the plans it describes. */
+  private val declaredFlags: Map[(String, String), String] = {
+    val queries = "the corpus is scanned once against the broadcast `vec_id < N` query side"
+    val centroids = "nearest-centroid assignment against the k centroids, collected to a local relation"
+    Map(
+      ("ann_bruteforce", "BNLJ") -> s"$queries: the brute-force contract",
+      ("ann_matryoshka_eval", "BNLJ") -> s"$queries, at full and truncated dims",
+      ("ann_maxsim", "BNLJ") -> s"$queries; token interaction is a per-pair HOF",
+      ("ann_radius", "BNLJ") -> s"$queries, under a cosine threshold",
+      ("ann_rbo_eval", "BNLJ") -> s"$queries for the exact ranking",
+      ("ann_recall_eval", "BNLJ") -> s"$queries for the exact leg",
+      ("cluster_assign", "BNLJ") -> centroids,
+      ("cluster_kmeans", "BNLJ") -> s"$centroids, once per Lloyd round",
+      ("cluster_purity", "BNLJ") -> s"$centroids, before the label census",
+      ("cluster_rand_index", "BNLJ") -> s"$centroids, before the pair counts",
+      ("dedup_semantic", "BNLJ") -> s"$centroids, as the blocking key",
+      ("pipeline_incremental_reindex", "BNLJ") -> s"$centroids, for the changed rows",
+      ("q_range_join", "BNLJ") ->
+        "a band predicate against a broadcast 3-row literal dimension; the fact side is scanned once")
+  }
+
+  /** Red flags in a pre-AQE physical plan, subqueries included:
+    *  - CARTESIAN: any CartesianProduct.
+    *  - BNLJ: a BroadcastNestedLoopJoin whose build side is not bounded.
+    *  - 1PART-UNBOUNDED: a SinglePartition shuffle over an unbounded input,
+    *    a raw-data funnel through one task.
+    *  - GLOBAL-WINDOW-UNBOUNDED: a window with no PARTITION BY over an
+    *    unbounded input.
+    * A subtree is bounded when something below it already collapsed the
+    * data: an aggregate, a limit or a top-k. */
+  private def redFlags(plan: SparkPlan): Seq[String] = {
+    def bounded(p: SparkPlan): Boolean = p.exists {
+      case _: BaseAggregateExec | _: TakeOrderedAndProjectExec |
+           _: LocalLimitExec | _: GlobalLimitExec | _: CollectLimitExec => true
+      case _ => false
+    }
+    val nodes = plan.collectWithSubqueries { case p => p }
+    Seq(
+      "CARTESIAN" -> nodes.exists(_.isInstanceOf[CartesianProductExec]),
+      "BNLJ" -> nodes.exists {
+        case j: BroadcastNestedLoopJoinExec =>
+          !bounded(if (j.buildSide == BuildLeft) j.left else j.right)
+        case _ => false
+      },
+      "1PART-UNBOUNDED" -> nodes.exists {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning == SinglePartition && !bounded(e.child)
+        case _ => false
+      },
+      "GLOBAL-WINDOW-UNBOUNDED" -> nodes.exists {
+        case w: WindowExec => w.partitionSpec.isEmpty && !bounded(w.child)
+        case _ => false
+      }
+    ).collect { case (f, true) => f }
+  }
+
+  /** Every graded batch query built once at sf0.001, shared by the two
+    * registry sweeps: its formatted plan and the red flags its pre-AQE
+    * physical plan fires, or the error planning it threw. Streaming
+    * queries are excluded (constructing one EXECUTES it; their shapes
+    * are covered by StreamingSpec + the graded runs). */
+  private lazy val sweptPlans: Seq[(String, Try[(String, Seq[String])])] =
+    SparkEntry.queries.keys.toSeq.sorted.filterNot(_.startsWith("stream_")).map { name =>
+      name -> Try {
+        val qe = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution
+        (qe.explainString(ExplainMode.fromString("formatted")), redFlags(qe.sparkPlan))
+      }
+    }
+
   test("registry sweep: no ScalaUDF / Python eval in ANY graded batch plan") {
     // The repo-wide codegen contract ("functions, not UDFs") enforced
     // mechanically over the ENTIRE registry: every scalar computation
     // must lower to built-ins or native graft Expressions. Typed
     // Aggregators (ObjectHashAggregate buffers) and mapPartitions codec
     // work are allowed by design — this asserts only that no per-row
-    // scalar ScalaUDF/Python eval sneaks into a hot path. Streaming
-    // queries are excluded (constructing one EXECUTES it; their shapes
-    // are covered by StreamingSpec + the graded runs).
-    val skip = (n: String) => n.startsWith("stream_")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(skip)
-      .flatMap { name =>
-        val p = try formatted(name) catch {
-          case e: Throwable => s"PLAN-FAILED: ${e.getMessage}"
-        }
-        if (p.contains("ScalaUDF") || p.contains("BatchEvalPython") ||
-            p.startsWith("PLAN-FAILED")) Some(name -> p.take(200))
-        else None
-      }
-    assert(offenders.isEmpty,
-      s"queries with UDF/Python eval or unplannable:\n${offenders.mkString("\n")}")
+    // scalar ScalaUDF/Python eval sneaks into a hot path.
+    val offending = sweptPlans.collect {
+      case (name, Failure(e)) => name -> s"PLAN-FAILED: ${e.getMessage}"
+      case (name, Success((p, _))) if p.contains("ScalaUDF") || p.contains("BatchEvalPython") =>
+        name -> p.take(200)
+    }
+    assert(offending.isEmpty,
+      s"queries with UDF/Python eval or unplannable:\n${offending.mkString("\n")}")
+  }
+
+  test("registry sweep: no undeclared plan red flag in ANY graded batch plan") {
+    // The same plans linted for the scale red flags above against
+    // `declaredFlags`; an unplannable query fails the sweep before this.
+    val flags = sweptPlans.collect { case (name, Success((_, fs))) => fs.map(name -> _) }
+      .flatten.toSet
+    val undeclared = flags.diff(declaredFlags.keySet).toSeq.sorted
+    val stale = declaredFlags.keySet.diff(flags).toSeq.sorted
+    assert(undeclared.isEmpty && stale.isEmpty,
+      s"undeclared red flags (query, flag): ${undeclared.mkString(", ")}; " +
+        s"declared but not firing: ${stale.mkString(", ")}")
   }
 
   test("q_recursive_cte plans as a native UnionLoop and matches a chain walk") {

@@ -170,16 +170,4 @@ class SortingSpec extends SparkSpec {
     assert(!plan.contains("SinglePartition"),
       s"global numbering must stay parallel; plan was:\n$plan")
   }
-
-  test("totalSortPartitioned: partition i holds keys <= partition i+1") {
-    val parted = Sorting.totalSortPartitioned(records, 8, col("id"))
-    val perPart = parted.select(col("id"), spark_partition_id().as("p"))
-      .groupBy("p").agg(min("id").as("lo"), max("id").as("hi"))
-      .orderBy("p").collect()
-    val ok = perPart.sliding(2).forall {
-      case Array(a, b) => a.getAs[Int]("hi") <= b.getAs[Int]("lo")
-      case _ => true
-    }
-    assert(ok, "range partitions must not overlap")
-  }
 }
