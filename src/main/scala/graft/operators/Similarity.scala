@@ -35,6 +35,42 @@ object Similarity {
         passthrough.map { case (c, as) => col(c).as(as) }: _*)
       .withColumn(nrmAs, VectorFunctions.norm(col(vecAs)))
 
+  /** Round-6 cosine of two prepped sides named by prefix:
+    * ⟨a_vec, b_vec⟩ / (a_nrm · b_nrm), the fold in that argument order.
+    * Every similarity path ranks or thresholds this one value; the
+    * rounding keeps the ranking engine-portable. */
+  private def cosine(a: String, b: String, vec: String = "_vec",
+                     nrm: String = "_nrm"): Column =
+    round(VectorFunctions.dot(col(a + vec), col(b + vec)) /
+      (col(a + nrm) * col(b + nrm)), 6)
+
+  /** The per-query top-k every ANN path ends in: rank each q_id's rows
+    * by `score` descending, then c_id ascending (so equal scores rank
+    * deterministically), and keep rank ≤ k. */
+  private def topK(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col(score).desc, col("c_id"))))
+      .filter(col("rank") <= k)
+
+  /** The refine step: exact cosine `cos_sim` of (q_id, c_id) candidate
+    * pairs — the prepped queries broadcast, the corpus joined on c_id,
+    * so raw vectors are fetched only for the candidates. */
+  private def rescore(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                      idCol: String, vecCol: String): DataFrame =
+    cand.join(broadcast(prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")), "q_id")
+      .join(prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm"), "c_id")
+      .select(col("q_id"), col("c_id"), cosine("q", "c").as("cos_sim"))
+
+  /** Every (query, corpus) pair but self-matches, scored by exact
+    * cosine `cos_sim`: the broadcast query side against one corpus
+    * scan. */
+  private def allPairs(corpus: DataFrame, queries: DataFrame,
+                       idCol: String, vecCol: String): DataFrame =
+    prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
+      .crossJoin(broadcast(prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")))
+      .filter(col("c_id") =!= col("q_id"))
+      .select(col("q_id"), col("c_id"), cosine("q", "c").as("cos_sim"))
+
   /** Symmetric per-vector int8 quantization — the storage-reduction
     * pass an embedding pipeline runs before indexing (4× smaller than
     * float32; dot products stay proportional within a vector's scale).
@@ -205,19 +241,8 @@ object Similarity {
     * to 6 decimals with candidate-id tie-break, so results are
     * deterministic and engine-portable. Self-matches are excluded. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val c = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    topK(allPairs(corpus, queries, idCol, vecCol), "cos_sim", k)
 
   /** Range (radius) search: ALL corpus vectors with cosine similarity
     * ≥ `minCos` to each query — the "find everything this close" sibling
@@ -234,16 +259,8 @@ object Similarity {
     * is only right while one side stays dimension-sized. */
   def bruteForceRadius(corpus: DataFrame, queries: DataFrame, minCos: Double,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val c = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    c.crossJoin(broadcast(q))
-      .filter(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= minCos)
-  }
+                       vecCol: String = "embedding"): DataFrame =
+    allPairs(corpus, queries, idCol, vecCol).filter(col("cos_sim") >= minCos)
 
   /** Late-interaction (ColBERT-style MaxSim) retrieval: each vector is
     * treated as `numChunks` token sub-vectors of `chunkDim` dims, and
@@ -294,14 +311,11 @@ object Similarity {
          |    transform(sequence(0, ${numChunks - 1}), j ->
          |      aggregate(zip_with(qc, slice(c_vec, j * $chunkDim + 1, $chunkDim), (x, y) -> x * y),
          |        cast(0 as double), (a, p) -> a + p))))""".stripMargin)
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"),
-        round(score / (col("q_nrm") * col("c_nrm")), 6).as("maxsim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("maxsim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        round(score / (col("q_nrm") * col("c_nrm")), 6).as("maxsim")),
+      "maxsim", k)
   }
 
   /** Simplified (centroid-based) silhouette per cluster — the clustering
@@ -326,9 +340,7 @@ object Similarity {
       .select(col("c_id").as("cell_id"), col("c_vec").as("cell_vec"),
         col("c_nrm").as("cell_nrm"))
     val sims = c.crossJoin(broadcast(cent))
-      .select(col("c_id"), col("cell_id"),
-        round(VectorFunctions.dot(col("c_vec"), col("cell_vec")) /
-          (col("c_nrm") * col("cell_nrm")), 6).as("sim"))
+      .select(col("c_id"), col("cell_id"), cosine("c", "cell").as("sim"))
     // top-2 centroids per point: sort the k-element list by (1−sim,
     // cell_id) — ascending distance == descending similarity with the
     // cluster_assign tie-break; sim rides along unreconstructed.
@@ -402,24 +414,20 @@ object Similarity {
     // No spread here: the plane dots are codegen'd graft_dot folds —
     // measured CHEAPER single-task than behind an extra exchange
     // (r13: ann_lsh 0.53 s → 0.99 s with a corpus spread, reverted).
-    val cb = lshBuckets(corpus, numPlanes, numBands, dim, idCol, vecCol)
-    val qb = lshBuckets(queries, numPlanes, numBands, dim, idCol, vecCol)
-    val cand = cb.alias("c").join(qb.alias("q"),
+    val cand = bandCandidates(
+      lshBuckets(corpus, numPlanes, numBands, dim, idCol, vecCol),
+      lshBuckets(queries, numPlanes, numBands, dim, idCol, vecCol))
+    topK(rescore(cand, corpus, queries, idCol, vecCol), "cos_sim", k)
+  }
+
+  /** LSH candidates: the distinct (q_id, c_id) pairs, self-pairs
+    * excluded, whose corpus and query buckets share a (band, band_key). */
+  private def bandCandidates(cb: DataFrame, qb: DataFrame): DataFrame =
+    cb.alias("c").join(qb.alias("q"),
         col("c.band") === col("q.band") && col("c.band_key") === col("q.band_key"))
       .select(col("q.id").as("q_id"), col("c.id").as("c_id"))
       .filter(col("q_id") =!= col("c_id"))
       .distinct()
-    val qv = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val cv = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val scored = cand.join(broadcast(qv), "q_id").join(cv, "c_id")
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
 
   /** Multi-probe LSH top-k: in addition to the query's own band key,
     * probe every key at Hamming distance 1 within each band (flip each
@@ -435,28 +443,15 @@ object Similarity {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
     val perBand = numPlanes / numBands
-    val cb = lshBuckets(corpus, numPlanes, numBands, dim, idCol, vecCol)
     val qb = lshBuckets(queries, numPlanes, numBands, dim, idCol, vecCol)
       .select(col("id"), col("band"), col("band_key"),
         explode(array((lit(0L) +: (0 until perBand).map(i => lit(1L << i))): _*))
           .as("flip"))
       .select(col("id"), col("band"),
         col("band_key").bitwiseXOR(col("flip")).as("band_key"))
-    val cand = cb.alias("c").join(qb.alias("q"),
-        col("c.band") === col("q.band") && col("c.band_key") === col("q.band_key"))
-      .select(col("q.id").as("q_id"), col("c.id").as("c_id"))
-      .filter(col("q_id") =!= col("c_id"))
-      .distinct()
-    val qv = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val cv = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val scored = cand.join(broadcast(qv), "q_id").join(cv, "c_id")
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val cand = bandCandidates(
+      lshBuckets(corpus, numPlanes, numBands, dim, idCol, vecCol), qb)
+    topK(rescore(cand, corpus, queries, idCol, vecCol), "cos_sim", k)
   }
 
   /** Johnson–Lindenstrauss random projection: reduce the embedding to
@@ -514,8 +509,7 @@ object Similarity {
       row_number().over(Window.orderBy(col("cell_id"))))
     val assign = c.crossJoin(broadcast(centR))
       .withColumn("__sim_micro",
-        round(round(VectorFunctions.dot(col("c_vec"), col("cell_vec")) /
-          (col("c_nrm") * col("cell_nrm")), 6) * 1e6, 0).cast("long"))
+        round(cosine("c", "cell") * 1e6, 0).cast("long"))
       .withColumn("__ord",
         (lit(1000000L) - col("__sim_micro")) * lit(1L << 32) + col("cell_rank"))
       .groupBy(col("c_id"))
@@ -529,30 +523,41 @@ object Similarity {
     * equi-join on cell_id (a plain shuffle — no cross product). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numCells: Int = 16, nProbe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    topK(rescore(ivfCandidates(corpus, queries, numCells, nProbe, None,
+        idCol, vecCol), corpus, queries, idCol, vecCol), "cos_sim", k)
+
+  /** IVF candidate generation: the (q_id, c_id) pairs, self-pairs
+    * excluded, whose corpus vector is assigned to one of the query's
+    * `nProbe` nearest cells (round-6 cosine desc, then cell_id). With
+    * `filterCol`, the probes carry the query's value of it and the
+    * candidate join key adds equality on it, so vectors of another
+    * value never become candidates. An equi-join on cell_id (a plain
+    * shuffle — no cross product). */
+  private def ivfCandidates(corpus: DataFrame, queries: DataFrame,
+                            numCells: Int, nProbe: Int, filterCol: Option[String],
+                            idCol: String, vecCol: String): DataFrame = {
     val (centroids, assign) = ivfIndex(corpus, numCells, idCol, vecCol)
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
+    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm",
+      passthrough = filterCol.map(_ -> "__qf").toSeq)
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("__csim").desc, col("cell_id"))
     val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("__csim",
-        round(VectorFunctions.dot(col("q_vec"), col("cell_vec")) /
-          (col("q_nrm") * col("cell_nrm")), 6))
+      .withColumn("__csim", cosine("q", "cell"))
       .withColumn("__rn", row_number().over(wq))
       .filter(col("__rn") <= nProbe)
-      .select(col("q_id"), col("cell_id"))
-    val cv = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val cand = probes.join(assign, "cell_id")
-      .select(col("q_id"), col("c_id"))
+      .select((col("q_id") +: filterCol.map(_ => col("__qf")).toSeq) :+
+        col("cell_id"): _*)
+    val pairs = filterCol match {
+      case None => probes.join(assign, "cell_id")
+      case Some(f) =>
+        val assignL = assign.join(
+          corpus.select(col(idCol).as("c_id"), col(f).as("__cf")), "c_id")
+        probes.join(assignL,
+          probes("cell_id") === assignL("cell_id") && col("__qf") === col("__cf"))
+    }
+    pairs.select(col("q_id"), col("c_id"))
       .filter(col("q_id") =!= col("c_id"))
-    val scored = cand.join(broadcast(q), "q_id").join(cv, "c_id")
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 
   /** Product-quantization codebooks: the vector is cut into `numSub`
@@ -620,24 +625,37 @@ object Similarity {
     * 1000× too big to hold uncompressed. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              numSub: Int = 16, numCodes: Int = 32, dim: Int = 64,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    topK(adcScores(corpus, queries, None, numSub, numCodes, dim, idCol, vecCol),
+      "adc_micro", k)
+
+  /** ADC scores `adc_micro` per (q_id, c_id). The lookup table holds,
+    * per query, subspace j and codeword, the round-6 ⟨q_j, codeword⟩
+    * × 10⁶ as BIGINT `ip_micro`, built against the broadcast codebook;
+    * a vector's score sums its codes' entries. Without `cand` every
+    * corpus vector but the query itself is scored; with it, only the
+    * candidate pairs' codes are read. */
+  private def adcScores(corpus: DataFrame, queries: DataFrame,
+                        cand: Option[DataFrame],
+                        numSub: Int, numCodes: Int, dim: Int,
+                        idCol: String, vecCol: String): DataFrame = {
     val sub = dim / numSub
     val cb = pqCodebooks(corpus, numSub, numCodes, dim, idCol, vecCol)
     val codes = pqEncode(corpus, cb, numSub, dim, idCol, vecCol)
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "__n")
-    val lut = q.crossJoin(broadcast(cb))
+    val lut = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
+      .crossJoin(broadcast(cb))
       .select(col("q_id"), col("j"), col("code_id"),
         round(VectorFunctions.dot(
             slice(col("q_vec"), col("j") * sub + 1, lit(sub)), col("cvec")) * 1e6, 0)
           .cast("long").as("ip_micro"))
-    val scored = codes.join(broadcast(lut), Seq("j", "code_id"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id"))
+    val pairs = cand match {
+      case None => codes.join(broadcast(lut), Seq("j", "code_id"))
+        .filter(col("q_id") =!= col("c_id"))
+      case Some(c) => c.join(codes, "c_id")
+        .join(broadcast(lut), Seq("q_id", "j", "code_id"))
+    }
+    pairs.groupBy(col("q_id"), col("c_id"))
       .agg(sum(col("ip_micro")).as("adc_micro"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_micro").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 
   /** Filtered ANN: exact top-k restricted to corpus vectors satisfying a
@@ -655,15 +673,10 @@ object Similarity {
       passthrough = Seq(filterCol -> "__qf"))
     val c = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm",
       passthrough = Seq(filterCol -> "__cf"))
-    val scored = c.join(broadcast(q),
+    topK(c.join(broadcast(q),
         col("__cf") === col("__qf") && col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .select(col("q_id"), col("c_id"), cosine("q", "c").as("cos_sim")),
+      "cos_sim", k)
   }
 
   /** IVF+PQ composite — the standard production serving shape (FAISS's
@@ -678,36 +691,9 @@ object Similarity {
                 numCells: Int = 16, nProbe: Int = 4,
                 numSub: Int = 16, numCodes: Int = 32, dim: Int = 64,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sub = dim / numSub
-    val (centroids, assign) = ivfIndex(corpus, numCells, idCol, vecCol)
-    val cb = pqCodebooks(corpus, numSub, numCodes, dim, idCol, vecCol)
-    val codes = pqEncode(corpus, cb, numSub, dim, idCol, vecCol)
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("__csim").desc, col("cell_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("__csim",
-        round(VectorFunctions.dot(col("q_vec"), col("cell_vec")) /
-          (col("q_nrm") * col("cell_nrm")), 6))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nProbe)
-      .select(col("q_id"), col("cell_id"))
-    val cand = probes.join(assign, "cell_id")
-      .select(col("q_id"), col("c_id"))
-      .filter(col("q_id") =!= col("c_id"))
-    val lut = q.crossJoin(broadcast(cb))
-      .select(col("q_id"), col("j"), col("code_id"),
-        round(VectorFunctions.dot(
-            slice(col("q_vec"), col("j") * sub + 1, lit(sub)), col("cvec")) * 1e6, 0)
-          .cast("long").as("ip_micro"))
-    val scored = cand.join(codes, "c_id")
-      .join(broadcast(lut), Seq("q_id", "j", "code_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("ip_micro")).as("adc_micro"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_micro").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val cand = ivfCandidates(corpus, queries, numCells, nProbe, None, idCol, vecCol)
+    topK(adcScores(corpus, queries, Some(cand), numSub, numCodes, dim,
+      idCol, vecCol), "adc_micro", k)
   }
 
   /** Filtered IVF+PQ composite — per-tenant / per-label vector search
@@ -725,40 +711,10 @@ object Similarity {
                         numCells: Int = 16, nProbe: Int = 4,
                         numSub: Int = 16, numCodes: Int = 32, dim: Int = 64,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sub = dim / numSub
-    val (centroids, assign) = ivfIndex(corpus, numCells, idCol, vecCol)
-    val cb = pqCodebooks(corpus, numSub, numCodes, dim, idCol, vecCol)
-    val codes = pqEncode(corpus, cb, numSub, dim, idCol, vecCol)
-    val q = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm",
-      passthrough = Seq(filterCol -> "__qf"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("__csim").desc, col("cell_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("__csim",
-        round(VectorFunctions.dot(col("q_vec"), col("cell_vec")) /
-          (col("q_nrm") * col("cell_nrm")), 6))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nProbe)
-      .select(col("q_id"), col("__qf"), col("cell_id"))
-    val assignL = assign.join(
-      corpus.select(col(idCol).as("c_id"), col(filterCol).as("__cf")), "c_id")
-    val cand = probes.join(assignL,
-        probes("cell_id") === assignL("cell_id") && col("__qf") === col("__cf"))
-      .select(col("q_id"), col("c_id"))
-      .filter(col("q_id") =!= col("c_id"))
-    val lut = q.crossJoin(broadcast(cb))
-      .select(col("q_id"), col("j"), col("code_id"),
-        round(VectorFunctions.dot(
-            slice(col("q_vec"), col("j") * sub + 1, lit(sub)), col("cvec")) * 1e6, 0)
-          .cast("long").as("ip_micro"))
-    val scored = cand.join(codes, "c_id")
-      .join(broadcast(lut), Seq("q_id", "j", "code_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("ip_micro")).as("adc_micro"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_micro").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val cand = ivfCandidates(corpus, queries, numCells, nProbe, Some(filterCol),
+      idCol, vecCol)
+    topK(adcScores(corpus, queries, Some(cand), numSub, numCodes, dim,
+      idCol, vecCol), "adc_micro", k)
   }
 
   /** Two-stage PQ retrieve-then-rerank: ADC ranks the compressed corpus
@@ -774,16 +730,7 @@ object Similarity {
     require(kAdc >= k, s"kAdc=$kAdc must be >= k=$k")
     val cand = pqTopK(corpus, queries, kAdc, numSub, numCodes, dim, idCol, vecCol)
       .select(col("q_id"), col("c_id"))
-    val qv = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val cv = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val scored = cand.join(broadcast(qv), "q_id").join(cv, "c_id")
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(rescore(cand, corpus, queries, idCol, vecCol), "cos_sim", k)
   }
 
   /** The COMPLETE production filtered-serving chain: metadata filter in
@@ -804,16 +751,7 @@ object Similarity {
     val cand = filteredIvfPqTopK(corpus, queries, kAdc, filterCol,
         numCells, nProbe, numSub, numCodes, dim, idCol, vecCol)
       .select(col("q_id"), col("c_id"))
-    val qv = prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm")
-    val cv = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
-    val scored = cand.join(broadcast(qv), "q_id").join(cv, "c_id")
-      .select(col("q_id"), col("c_id"),
-        round(VectorFunctions.dot(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(rescore(cand, corpus, queries, idCol, vecCol), "cos_sim", k)
   }
 
   /** Lloyd's k-means over the embedding column — the curation companion
@@ -860,9 +798,7 @@ object Similarity {
     * share the assignment convention. */
   private def assignCore(c: DataFrame, cent: DataFrame): DataFrame =
     c.crossJoin(broadcast(cent))
-      .withColumn("__sim",
-        round(VectorFunctions.dot(col("c_vec"), col("cell_vec")) /
-          (col("c_nrm") * col("cell_nrm")), 6))
+      .withColumn("__sim", cosine("c", "cell"))
       .groupBy(col("c_id"))
       .agg(expr("min_by(struct(c_vec, cell_id, __sim), struct(-__sim, cell_id))").as("__b"))
       .select(col("c_id"), col("__b.c_vec").as("c_vec"),
@@ -974,8 +910,7 @@ object Similarity {
       .withColumn("__bn", count(lit(1)).over(Window.partitionBy(col("blk"))))
     def score(pairs: DataFrame): DataFrame =
       pairs.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          round(VectorFunctions.dot(col("a.v"), col("b.v")) /
-            (col("a.nrm") * col("b.nrm")), 6).as("cos_sim"))
+          cosine("a.", "b.", "v", "nrm").as("cos_sim"))
         .filter(col("cos_sim") >= minCos)
 
     val small = e.filter(col("__bn") <= maxExactBlock)

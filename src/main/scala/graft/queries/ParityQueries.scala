@@ -300,6 +300,18 @@ object ParityQueries {
       col("event_id"), col("ts_ms"),
       col("user_id"), col("event_type"), col("value"), col("props"))
 
+  /** One micro-batch of events reduced to its latest row per `user_id`:
+    * the greatest (ts_ms, event_id, event_type, value) struct, a
+    * partial-aggregable max, never a window over the batch. The delta
+    * both foreachBatch sinks merge. */
+  private def latestPerUser(batch: DataFrame): DataFrame =
+    batch.groupBy(col("user_id"))
+      .agg(max(struct(col("ts_ms"), col("event_id"), col("event_type"),
+        col("value"))).as("last"))
+      .select(col("user_id"), col("last.ts_ms").as("ts_ms"),
+        col("last.event_type").as("event_type"),
+        col("last.value").as("value"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O7–O9: numeric-key global total sort, payload passthrough.
     "sort_by_id" -> ((s, dir) =>
@@ -662,13 +674,7 @@ object ParityQueries {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val delta = batch
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("ts_ms"), col("event_id"), col("event_type"),
-              col("value"))).as("last"))
-            .select(col("user_id"), col("last.ts_ms").as("ts_ms"),
-              col("last.event_type").as("event_type"),
-              col("last.value").as("value"))
+          val delta = latestPerUser(batch)
           val merged = statePath match {
             case None => delta
             case Some(p) =>
@@ -720,13 +726,7 @@ object ParityQueries {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val delta = batch
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("ts_ms"), col("event_id"), col("event_type"),
-              col("value"))).as("last"))
-            .select(col("user_id"), col("last.ts_ms").as("ts_ms"),
-              col("last.event_type").as("event_type"),
-              col("last.value").as("value"))
+          val delta = latestPerUser(batch)
           val txn = s"svs-batch-$batchId"
           val v = TimeTravel.upsertOnce(root, delta, txn)
           val replay = TimeTravel.upsertOnce(root, delta, txn)

@@ -2551,13 +2551,7 @@ object RelationalQueries {
     // over (deg_u, deg_v) pairs runs on exact BIGINT moment sums (the
     // q_corr_agg pattern on graph data) with one sqrt at the end.
     "graph_assortativity" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val d = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
+      val d = TrainingDataQueries.linkGraph(Tables.documents(s, dir))
       val e = d.union(d.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
       val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
@@ -6002,9 +5996,7 @@ object RelationalQueries {
 
     // Same exact BIGINT moment sums over the symmetrized edge list.
     "graph_assortativity" ->
-      """WITH d AS (SELECT doc_id AS src,
-        |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-        |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH d AS (${TrainingDataQueries.linkGraphSql}),
         |e AS (SELECT src, dst FROM
         |        (SELECT src, dst FROM d UNION SELECT dst, src FROM d)
         |      WHERE src <> dst),

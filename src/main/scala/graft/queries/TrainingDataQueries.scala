@@ -47,6 +47,13 @@ object TrainingDataQueries {
       f"WHEN $dCol = $d THEN $w%.17g"
     }.mkString("CASE ", " ", " ELSE 0.0 END")
 
+  /** DuckDB body of [[linkGraph]], for a CTE: (src, dst) over
+    * `documents`, with the node count as a scalar subquery. */
+  private[queries] val linkGraphSql: String =
+    """SELECT doc_id AS src,
+      |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
+      |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks""".stripMargin
+
   /** Shared label-propagation CTE chain (synthetic 40-ring graph, 3
     * rounds) — consumed by graph_label_prop AND graph_modularity so both
     * grade the identical communities. */
@@ -109,9 +116,7 @@ object TrainingDataQueries {
          |    CAST(sum(est_micro) AS BIGINT) AS sum_ball_micro
          |  FROM pn$t)""".stripMargin
     }.mkString(",\n")
-    s"""d AS (SELECT doc_id AS src,
-       |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-       |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+    s"""d AS ($linkGraphSql),
        |n AS (SELECT DISTINCT id FROM
        |        (SELECT src AS id FROM d UNION ALL SELECT dst FROM d)),
        |h AS (SELECT id, md5(CAST(id AS VARCHAR)) AS hx FROM n),
@@ -487,6 +492,39 @@ object TrainingDataQueries {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan.readSchema().fieldNames.toSeq
     }
+
+  /** The synthetic link graph the link-graph queries grade: each doc
+    * links to the three targets dst = (7·src + 13·k) mod n, k = 1..3,
+    * with n the number of `docs` rows. n is counted here, once, and
+    * enters the plan as a literal: as a scalar subquery it was measured
+    * slower, since the plan then runs the count once per branch that
+    * reads the graph. Output (src, dst); [[linkGraphSql]] is the oracle
+    * side. */
+  private[queries] def linkGraph(docs: DataFrame): DataFrame = {
+    val n = docs.count()
+    docs.select(col("doc_id").as("src"),
+        explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
+      .select(col("src"),
+        pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
+  }
+
+  /** [[linkGraph]] with a PLANTED dense community: docs 0–39 also link
+    * to their next 5 neighbors on the 40-ring, dst = (src + j) mod 40,
+    * j = 1..5 — the core graph_kcore and graph_ktruss must isolate. */
+  private[queries] def plantedCore(docs: DataFrame): DataFrame =
+    linkGraph(docs).unionAll(docs.filter(col("doc_id") < 40)
+      .select(col("doc_id").as("src"),
+        explode(array(lit(1L), lit(2L), lit(3L), lit(4L), lit(5L))).as("j"))
+      .select(col("src"), pmod(col("src") + col("j"), lit(40L)).as("dst")))
+
+  /** The block-ring community graph: 40-doc blocks, each doc linked to
+    * the next two in its block's ring. Output (src, dst). */
+  private[queries] def ringGraph(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("src"),
+        explode(array(lit(1L), lit(2L))).as("k"))
+      .select(col("src"),
+        (expr("src div 40") * 40 +
+          pmod(pmod(col("src"), lit(40)) + col("k"), lit(40))).as("dst"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> ((s, dir) =>
@@ -1807,14 +1845,8 @@ object TrainingDataQueries {
     // algorithm hash-matches an oracle that unrolls the same five
     // rounds. Both engines derive N from the data.
     "graph_pagerank" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      Graph.pageRank(edges, iterations = 5).orderBy("id")
+      Graph.pageRank(linkGraph(Tables.documents(s, dir)), iterations = 5)
+        .orderBy("id")
     }),
 
     // Personalized PageRank from the SAME landmark set graph_bfs uses
@@ -1825,12 +1857,7 @@ object TrainingDataQueries {
     // rounds.
     "graph_ppr" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
+      val edges = linkGraph(docs)
       val landmarks = docs.filter(col("doc_id") % 50 === 0)
       Graph.personalizedPageRank(edges, landmarks, iterations = 5,
           idCol = "doc_id")
@@ -1842,14 +1869,7 @@ object TrainingDataQueries {
     // groupBys and one full outer join, no expand (one distinct column
     // per aggregate).
     "graph_degrees" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      Graph.degreeStats(edges).orderBy("id")
+      Graph.degreeStats(linkGraph(Tables.documents(s, dir))).orderBy("id")
     }),
 
     // Synchronous label propagation over a block-ring community graph
@@ -1858,14 +1878,8 @@ object TrainingDataQueries {
     // heuristic replayable, and the oracle unrolls the identical
     // recurrence with a window argmax.
     "graph_label_prop" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L))).as("k"))
-        .select(col("src"),
-          (expr("src div 40") * 40 +
-            pmod(pmod(col("src"), lit(40)) + col("k"), lit(40))).as("dst"))
-      Graph.labelPropagation(edges, iterations = 3).orderBy("id")
+      Graph.labelPropagation(ringGraph(Tables.documents(s, dir)), iterations = 3)
+        .orderBy("id")
     }),
 
     // Modularity Q = Σ_c (e_c/m − (d_c/2m)²) of the label-propagation
@@ -1881,13 +1895,7 @@ object TrainingDataQueries {
     // partial-aggregate order and DuckDB's sequential sum land on the
     // identical IEEE double before round(…, 6).
     "graph_modularity" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val d = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L))).as("k"))
-        .select(col("src"),
-          (expr("src div 40") * 40 +
-            pmod(pmod(col("src"), lit(40)) + col("k"), lit(40))).as("dst"))
+      val d = ringGraph(Tables.documents(s, dir))
       // labels feed TWO joins (endpoint a and endpoint b): checkpoint
       // the 3-round lineage once instead of replaying it per join arm.
       val labels = Graph.labelPropagation(d, iterations = 3).localCheckpoint()
@@ -1939,14 +1947,8 @@ object TrainingDataQueries {
     // above this graph's max degree, so the Jaccard here is exact),
     // then one groupBy per unordered pair.
     "graph_link_pred" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      Graph.commonNeighbors(edges, degCap = 64).orderBy("a", "b")
+      Graph.commonNeighbors(linkGraph(Tables.documents(s, dir)), degCap = 64)
+        .orderBy("a", "b")
     }),
 
     // Multi-source BFS over the same synthetic link graph: hop distance
@@ -1957,12 +1959,7 @@ object TrainingDataQueries {
     // from both.
     "graph_bfs" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
+      val edges = linkGraph(docs)
       val sources = docs.filter(col("doc_id") % 50 === 0)
       Graph.bfsDistance(edges, sources, rounds = 8, idCol = "doc_id")
         .orderBy("node")
@@ -1979,18 +1976,8 @@ object TrainingDataQueries {
     // slack. The oracle unrolls the identical peel as a CTE chain, so
     // a dropped or spared node in ANY round hash-mismatches.
     "graph_kcore" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val ring = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      val planted = docs.filter(col("doc_id") < 40)
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L), lit(4L), lit(5L))).as("j"))
-        .select(col("src"), pmod(col("src") + col("j"), lit(40L)).as("dst"))
-      Graph.kCore(ring.unionAll(planted), k = 8, rounds = 4).orderBy("id")
+      Graph.kCore(plantedCore(Tables.documents(s, dir)), k = 8, rounds = 4)
+        .orderBy("id")
     }),
 
     // 4-truss over the same planted graph — the EDGE-grained core: an
@@ -2005,18 +1992,7 @@ object TrainingDataQueries {
     // support WITHOUT re-filtering (the kCore reporting convention), so
     // a premature or missed peel in any round hash-mismatches.
     "graph_ktruss" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val ring = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      val planted = docs.filter(col("doc_id") < 40)
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L), lit(4L), lit(5L))).as("j"))
-        .select(col("src"), pmod(col("src") + col("j"), lit(40L)).as("dst"))
-      Graph.kTruss(ring.unionAll(planted), k = 4, rounds = 3)
+      Graph.kTruss(plantedCore(Tables.documents(s, dir)), k = 4, rounds = 3)
         .orderBy("a", "b")
     }),
 
@@ -2059,13 +2035,7 @@ object TrainingDataQueries {
     // shuffles of the |E|-sized edge set (distinct + the swap join),
     // both partial-aggregable — no per-node state, no windows.
     "graph_reciprocity" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val e = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
+      val e = linkGraph(Tables.documents(s, dir))
         .filter(col("src") =!= col("dst"))
         .distinct()
       val recip = e.join(
@@ -2086,14 +2056,8 @@ object TrainingDataQueries {
     // before the total, so every reported value is an exact integer
     // the oracle replays register-for-register.
     "graph_hyperball" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      Graph.hyperBall(edges, rounds = 3).orderBy("t")
+      Graph.hyperBall(linkGraph(Tables.documents(s, dir)), rounds = 3)
+        .orderBy("t")
     }),
 
     // Interpolated effective diameter — the HyperANF/HADI headline
@@ -2105,14 +2069,7 @@ object TrainingDataQueries {
     // comparisons, 9·nmax − 10·prev numerator); the lag window runs
     // over the rounds-sized table (4 rows), never the data.
     "graph_effective_diameter" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      val nb = Graph.hyperBall(edges, rounds = 3)
+      val nb = Graph.hyperBall(linkGraph(Tables.documents(s, dir)), rounds = 3)
       val mx = nb.agg(max(col("sum_ball_micro")).as("nmax"))
       val w = Window.orderBy("t")
       val x = nb.select(col("t"), col("sum_ball_micro").as("cur"))
@@ -2144,14 +2101,7 @@ object TrainingDataQueries {
     // then ONE pivot-by-t groupBy over the (node, round) table —
     // no window, no spine.
     "graph_closeness" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("k"))
-        .select(col("src"),
-          pmod(col("src") * 7 + col("k") * 13, lit(n)).as("dst"))
-      Graph.hyperBallPerNode(edges, rounds = 3)
+      Graph.hyperBallPerNode(linkGraph(Tables.documents(s, dir)), rounds = 3)
         .groupBy(col("id"))
         .agg(
           sum(when(col("t") === 0, col("est_micro")).otherwise(0L)).as("b0"),
@@ -5385,9 +5335,7 @@ object TrainingDataQueries {
     // Reciprocity replay: distinct directed edges, mutual pairs via the
     // swapped-key EXISTS, one micro floor division.
     "graph_reciprocity" ->
-      """WITH d AS (SELECT doc_id AS src,
-        |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-        |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH d AS ($linkGraphSql),
         |e AS (SELECT DISTINCT src, dst FROM d WHERE src <> dst),
         |r AS (SELECT count(*) AS n_recip FROM e
         |      WHERE EXISTS (SELECT 1 FROM e e2
@@ -5801,9 +5749,7 @@ object TrainingDataQueries {
            |    FROM e JOIN $prev p ON e.src = p.id JOIN od d ON e.src = d.src
            |    GROUP BY e.dst) s$i ON n.id = s$i.id)"""
       }.mkString(",\n")
-      s"""WITH e AS (SELECT doc_id AS src,
-         |             (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-         |           FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH e AS ($linkGraphSql),
          |nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
          |od AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
          |p0 AS (SELECT id, CAST(1000000 AS BIGINT) AS pr FROM nodes),
@@ -5823,9 +5769,7 @@ object TrainingDataQueries {
            |    FROM e JOIN $prev p ON e.src = p.id JOIN od d ON e.src = d.src
            |    GROUP BY e.dst) s$i ON n.id = s$i.id)"""
       }.mkString(",\n")
-      s"""WITH e AS (SELECT doc_id AS src,
-         |             (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-         |           FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH e AS ($linkGraphSql),
          |nodes AS (SELECT id, CASE WHEN id % 50 = 0 THEN 1 ELSE 0 END AS is_src
          |          FROM (SELECT src AS id FROM e UNION SELECT dst FROM e)),
          |od AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
@@ -5835,9 +5779,7 @@ object TrainingDataQueries {
     },
 
     "graph_degrees" ->
-      """WITH e AS (SELECT doc_id AS src,
-        |             (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-        |           FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH e AS ($linkGraphSql),
         |o AS (SELECT src AS id, count(*) AS out_deg,
         |             count(DISTINCT dst) AS out_nbrs FROM e GROUP BY 1),
         |i AS (SELECT dst AS id, count(*) AS in_deg,
@@ -5890,9 +5832,7 @@ object TrainingDataQueries {
          |FROM co CROSS JOIN t ORDER BY label""".stripMargin,
 
     "graph_link_pred" ->
-      """WITH d AS (SELECT doc_id AS src,
-        |             (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-        |           FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH d AS ($linkGraphSql),
         |e AS (SELECT src, dst FROM
         |        (SELECT src, dst FROM d UNION SELECT dst, src FROM d)
         |      WHERE src <> dst),
@@ -5913,10 +5853,8 @@ object TrainingDataQueries {
     // pairs under the same dist < 8 cap the Spark relaxation rounds
     // impose; UNION dedup bounds exploration at nodes × 9 rows.
     "graph_bfs" ->
-      """WITH RECURSIVE
-        |d AS (SELECT doc_id AS src,
-        |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-        |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks),
+      s"""WITH RECURSIVE
+        |d AS ($linkGraphSql),
         |walk(node, dist) AS (
         |  SELECT DISTINCT doc_id, CAST(0 AS BIGINT) FROM documents
         |  WHERE doc_id % 50 = 0
@@ -5934,9 +5872,7 @@ object TrainingDataQueries {
            |        AND e.dst IN (SELECT id FROM a${i - 1}) GROUP BY 1),
            |a$i AS (SELECT id FROM d$i WHERE deg >= 8)""".stripMargin
       }.mkString(",\n")
-      s"""WITH d AS (SELECT doc_id AS src,
-         |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-         |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks
+      s"""WITH d AS ($linkGraphSql
          |      UNION ALL
          |      SELECT doc_id AS src, (doc_id + j) % 40 AS dst
          |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3, 4, 5]) AS j) js
@@ -5968,9 +5904,7 @@ object TrainingDataQueries {
            |      GROUP BY u.a, u.b),
            |u$i AS (SELECT a, b FROM s$i WHERE sup >= 2)""".stripMargin
       }.mkString(",\n")
-      s"""WITH d AS (SELECT doc_id AS src,
-         |        (doc_id * 7 + k * 13) % (SELECT count(*) FROM documents) AS dst
-         |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) ks
+      s"""WITH d AS ($linkGraphSql
          |      UNION ALL
          |      SELECT doc_id AS src, (doc_id + j) % 40 AS dst
          |      FROM documents CROSS JOIN (SELECT unnest([1, 2, 3, 4, 5]) AS j) js

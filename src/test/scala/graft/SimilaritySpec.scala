@@ -587,4 +587,33 @@ class SimilaritySpec extends SparkSpec {
     assert(joint.forall { case (m, c) => m >= c - 1e-6 },
       "MaxSim must dominate plain cosine on shared pairs")
   }
+
+  test("shared top-k ranking: an exact cosine tie ranks the lower c_id first, and k keeps it") {
+    // v and 2v have the identical cosine to any query: doubling is exact
+    // in the dot and in the norm. q is v nudged off its axis; -v is far.
+    val v = (0 until 64).map(i => ((i * 37) % 11 - 5).toFloat)
+    val q = v.updated(0, v(0) + 0.5f)
+    val twice = v.map(_ * 2)
+    val qs = Seq((0L, q, 0L)).toDF("vec_id", "embedding", "label")
+    // both row orders, so no input order can stand in for the tie-break
+    val orders = Seq(
+      Seq(0L -> q, 5L -> v, 3L -> twice, 1L -> v.map(-_)),
+      Seq(0L -> q, 3L -> twice, 5L -> v, 1L -> v.map(-_)))
+    val ops: Seq[(String, (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        "bruteForceTopK" -> ((c, k) => Similarity.bruteForceTopK(c, qs, k)),
+        "filteredTopK" -> ((c, k) => Similarity.filteredTopK(c, qs, k)),
+        "lshTopK" -> ((c, k) => Similarity.lshTopK(c, qs, k)),
+        "pqRerankTopK" -> ((c, k) => Similarity.pqRerankTopK(c, qs, k, kAdc = 3)))
+    for (rows <- orders; (name, op) <- ops) {
+      val corpus = rows.map { case (id, e) => (id, e, 0L) }
+        .toDF("vec_id", "embedding", "label")
+      val two = op(corpus, 2).orderBy("rank")
+        .select("c_id", "cos_sim").as[(Long, Double)].collect().toSeq
+      assert(two.map(_._1) === Seq(3L, 5L), s"$name, rows ${rows.map(_._1)}")
+      assert(two(0)._2 === two(1)._2, s"$name: the two cosines must tie")
+      val one = op(corpus, 1).select("c_id").as[Long].collect().toSeq
+      assert(one === Seq(3L), s"$name at k = 1, rows ${rows.map(_._1)}")
+    }
+  }
 }
